@@ -97,19 +97,15 @@ def list_catalog_tables(spark: SparkSession, db_name: str) -> list[str]:
     return [t.name for t in spark.catalog.listTables(db_name)]
 
 
-def profile_catalog_database(
-    spark: SparkSession,
-    db_name: str,
-    config: ProfilerConfig | None = None,
-    include_approx: bool = True,
-    names: list[str] | None = None,
-) -> DataFrame:
-    """Profile every table of a metastore/catalog database by name.
+def catalog_tables(
+    spark: SparkSession, db_name: str, names: list[str] | None = None
+) -> dict[str, DataFrame]:
+    """``{name: DataFrame}`` for the tables of a catalog database, from ONE
+    ``listTables`` call.
 
     Temp views surface in ``listTables`` without a database — they resolve
     unqualified (``spark.table(name)``); metastore tables resolve as
-    ``db.name``. ``names`` optionally restricts the run to a subset (the
-    reference always profiles the full database, Main.scala:188-195).
+    ``db.name``. ``names`` optionally restricts the result to a subset.
     """
     tables = {}
     for t in spark.catalog.listTables(db_name):
@@ -117,4 +113,20 @@ def profile_catalog_database(
             continue
         qualified = f"{t.database}.{t.name}" if t.database else t.name
         tables[t.name] = spark.table(qualified)
+    return tables
+
+
+def profile_catalog_database(
+    spark: SparkSession,
+    db_name: str,
+    config: ProfilerConfig | None = None,
+    include_approx: bool = True,
+    names: list[str] | None = None,
+) -> DataFrame:
+    """Profile every table of a metastore/catalog database by name
+    (resolution as in :func:`catalog_tables`). ``names`` optionally
+    restricts the run to a subset (the reference always profiles the full
+    database, Main.scala:188-195).
+    """
+    tables = catalog_tables(spark, db_name, names)
     return profile_database(tables, config, include_approx=include_approx)

@@ -25,12 +25,16 @@ only slower on fork-heavy paths.
 from __future__ import annotations
 
 import os
+import re
 
 
 def _default_jar_path() -> str:
     """jars/forkless-localfs.jar next to the package (repo layout)."""
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     return os.path.join(os.path.dirname(pkg_root), "jars", "forkless-localfs.jar")
+
+
+CODE_CACHE_FLAG = "-XX:ReservedCodeCacheSize=512m"
 
 
 def long_session_jvm_confs() -> dict:
@@ -49,10 +53,40 @@ def long_session_jvm_confs() -> dict:
     codegen-heavy Spark drivers; it costs virtual memory only until used.
 
     Must be set at JVM launch (session builder), not on a live session.
+    A builder conf REPLACES the ``spark-defaults.conf`` value, so the
+    flag is appended to the user's existing
+    ``spark.driver.extraJavaOptions`` (read from ``$SPARK_CONF_DIR``,
+    else ``$SPARK_HOME/conf``), and a user-chosen
+    ``ReservedCodeCacheSize`` is left as it is.
     """
-    return {
-        "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=512m",
-    }
+    key = "spark.driver.extraJavaOptions"
+    existing = _spark_defaults().get(key, "")
+    if "ReservedCodeCacheSize" in existing:
+        return {key: existing}
+    return {key: f"{existing} {CODE_CACHE_FLAG}".strip()}
+
+
+def _spark_defaults() -> dict[str, str]:
+    """Properties of the ``spark-defaults.conf`` spark-submit would load:
+    ``$SPARK_CONF_DIR``, else ``$SPARK_HOME/conf``; {} when there is none.
+    Lines are ``key value`` (or ``key=value``); ``#``/``!`` start comments.
+    """
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    if not conf_dir and os.environ.get("SPARK_HOME"):
+        conf_dir = os.path.join(os.environ["SPARK_HOME"], "conf")
+    path = os.path.join(conf_dir or "", "spark-defaults.conf")
+    if not conf_dir or not os.path.isfile(path):
+        return {}
+    props = {}
+    with open(path, encoding="utf-8") as f:
+        for line in f:
+            line = line.strip()
+            if not line or line[0] in "#!":
+                continue
+            m = re.match(r"([^\s=:]+)\s*[\s=:]\s*(.*)", line)
+            if m:
+                props[m.group(1)] = m.group(2).strip()
+    return props
 
 
 def forkless_fs_confs(jar: str | None = None, build: bool = True) -> dict:
@@ -87,11 +121,12 @@ def forkless_fs_confs(jar: str | None = None, build: bool = True) -> dict:
     }
 
 
-def engine_session_confs() -> dict:
+def engine_session_confs(build: bool = True) -> dict:
     """All engine-recommended session confs: forkless local FS (when the
     jar is available) + long-session JVM sizing. Applied by the CLI
     session recipe and the bench harness; user sessions can apply the
-    same dict."""
+    same dict. ``build=False`` never runs the jar's javac build (the CLI:
+    building a session must have no side effects)."""
     confs = dict(long_session_jvm_confs())
-    confs.update(forkless_fs_confs())
+    confs.update(forkless_fs_confs(build=build))
     return confs

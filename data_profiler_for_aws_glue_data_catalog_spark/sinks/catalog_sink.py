@@ -19,9 +19,11 @@ against a local pluggable store:
 
 Spark-first difference: the reference materializes the metrics DataFrame
 once per table and then runs one ``filter(instance = <col>).collect()``
-per column — O(columns) driver round trips (Main.scala:214-225).
-``metrics_to_params`` collects the (tiny, O(columns x metrics)-row) long
-relation ONCE and splits it driver-side.
+per column — O(columns) driver round trips (Main.scala:214-225). Here the
+(tiny, O(columns x metrics)-row) long relation is collected ONCE and
+``metrics_to_params`` splits the collected rows driver-side, so a caller
+that also writes the Parquet sink (cli.run) feeds both sinks from one
+execution of the profile.
 """
 
 from __future__ import annotations
@@ -30,6 +32,7 @@ import json
 import logging
 import math
 import os
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -143,19 +146,21 @@ class LocalMetadataCatalog:
 
 
 def metrics_to_params(
-    metrics: DataFrame, config: ProfilerConfig | None = None
+    rows: Iterable, config: ProfilerConfig | None = None
 ) -> tuple[dict[str, str], dict[str, dict[str, str]]]:
-    """Split one table's metrics relation into (table_params, columns_params).
+    """Split one table's collected metrics rows into (table_params,
+    columns_params).
 
-    ONE collect of the long relation (vs the reference's per-column
-    filter+collect loop, Main.scala:214-225). Keys are
+    ``rows``: anything whose items index by ``entity``/``instance``/
+    ``name``/``value`` — ``DataFrame.collect()`` Rows or
+    ``toArrow().to_pylist()`` dicts. Keys are
     ``<stats_prefix>__<MetricName>`` (Main.scala:211,221).
     """
     config = config or ProfilerConfig()
     prefix = config.prefixed
     table_params: dict[str, str] = {}
     columns_params: dict[str, dict[str, str]] = {}
-    for row in metrics.select("entity", "instance", "name", "value").collect():
+    for row in rows:
         key = prefix + row["name"]
         val = format_metric_value(row["value"])
         if row["entity"] == "Dataset":
@@ -172,9 +177,10 @@ def publish_profile(
     table: str,
     config: ProfilerConfig | None = None,
 ) -> None:
-    """Profile-metrics -> catalog parameters for one table."""
+    """Profile-metrics -> catalog parameters for one table (ONE collect)."""
     config = config or ProfilerConfig()
-    table_params, columns_params = metrics_to_params(metrics, config)
+    rows = metrics.select("entity", "instance", "name", "value").collect()
+    table_params, columns_params = metrics_to_params(rows, config)
     catalog.update_table_metadata(
         db, table, config.prefixed, table_params, columns_params
     )

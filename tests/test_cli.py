@@ -1,8 +1,15 @@
 from __future__ import annotations
 
 import json
+import math
+import os
 
+import pytest
+
+from data_profiler_for_aws_glue_data_catalog_spark import cli, sinks
 from data_profiler_for_aws_glue_data_catalog_spark.cli import run
+from data_profiler_for_aws_glue_data_catalog_spark.plans import session
+from tests.conftest import SF_SMOKE
 
 
 def test_cli_local_catalog_and_sinks(spark, tmp_path):
@@ -106,3 +113,121 @@ def test_cli_region_mode_end_to_end(spark, tmp_path):
     assert set(
         r["table_name"] for r in back.select("table_name").distinct().collect()
     ) == {"cli_nation", "cli_region2"}
+
+
+def _jobs_in_group(spark, group, fn):
+    """Ids of the Spark jobs ``fn()`` submits, via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _views(spark, **paths):
+    for name, path in paths.items():
+        spark.read.parquet(path).createOrReplaceTempView(name)
+
+
+def test_cli_profiles_each_table_once_for_both_sinks(spark, tmp_path, monkeypatch):
+    """Both sinks cost the catalog-only run's jobs plus the Parquet write's
+    own: the profile executes once and both sinks read its rows."""
+    _views(
+        spark,
+        cli_once_region=f"{SF_SMOKE}/region.parquet",
+        cli_once_nation=f"{SF_SMOKE}/nation.parquet",
+    )
+    # only an unprofiled column: its metrics schema has a non-null value
+    spark.range(2).selectExpr("current_date() AS d").createOrReplaceTempView(
+        "cli_once_dates"
+    )
+    base = ["--dbName", "default", "--compExp", "true"]
+    cat_only = _jobs_in_group(
+        spark,
+        "cli_catalog_only",
+        lambda: run(base + ["--catalogJson", str(tmp_path / "a.json")], spark=spark),
+    )
+
+    write_jobs = set()
+    write = sinks.write_metrics_parquet
+
+    def write_in_own_group(*args, **kwargs):
+        write_jobs.update(
+            _jobs_in_group(spark, "cli_write", lambda: write(*args, **kwargs))
+        )
+        spark.sparkContext.setJobGroup("cli_both", "cli_both")
+
+    monkeypatch.setattr(sinks, "write_metrics_parquet", write_in_own_group)
+    out, cat_path = str(tmp_path / "metrics"), str(tmp_path / "b.json")
+    both = _jobs_in_group(
+        spark,
+        "cli_both",
+        lambda: run(base + ["--catalogJson", cat_path, "--outputPrefix", out], spark=spark),
+    )
+    assert cat_only and write_jobs
+    # the write runs over the collected rows: its own jobs, no profile
+    assert len(write_jobs) <= 2, sorted(write_jobs)
+    # outside the write, both sinks cost what the catalog sink alone costs
+    assert len(both) <= len(cat_only), (len(both), len(cat_only))
+
+    # one execution feeds both sinks: every Parquet value equals the stored
+    # catalog parameter
+    raw = json.load(open(cat_path))["default"]
+    rows = spark.read.parquet(out).collect()
+    assert {r["table_name"] for r in rows} == set(raw)
+    for r in rows:
+        entry = raw[r["table_name"]]
+        params = (
+            entry["parameters"]
+            if r["entity"] == "Dataset"
+            else entry["column_parameters"][r["instance"]]
+        )
+        stored = float(params["DQP__" + r["name"]])
+        if r["value"] is None or math.isnan(r["value"]):
+            assert math.isnan(stored), r
+        else:
+            assert stored == r["value"], r
+
+
+@pytest.mark.parametrize("mode", ["local", "region"])
+def test_cli_failing_profile_publishes_nothing(spark, tmp_path, mode):
+    """Profile-all-then-publish: a table whose profile raises leaves both
+    sinks unwritten, including the tables profiled before it."""
+    _views(spark, cli_fail_a=f"{SF_SMOKE}/region.parquet")
+    spark.range(3).selectExpr(
+        "id", "if(id > 1, raise_error('boom'), 'x') AS bad"
+    ).createOrReplaceTempView("cli_fail_z")
+    out, cat_path = str(tmp_path / "metrics"), str(tmp_path / "catalog.json")
+    fake = _FakeGlueE2E()
+    fake.pages = {None: (["cli_fail_a", "cli_fail_z"], None)}
+    argv = ["--dbName", "default", "--outputPrefix", out]
+    argv += ["--region", "eu-west-1"] if mode == "region" else ["--catalogJson", cat_path]
+    try:
+        with pytest.raises(Exception, match="boom"):
+            run(argv, spark=spark, glue_client=fake)
+    finally:
+        spark.catalog.dropTempView("cli_fail_a")
+        spark.catalog.dropTempView("cli_fail_z")
+    assert not os.path.exists(out)
+    assert not os.path.exists(cat_path)
+    assert fake.updated == {}
+
+
+def test_cli_session_confs_never_build_the_jar(tmp_path, monkeypatch):
+    """Building the CLI's session runs no javac, even when the jar is
+    missing next to a buildable source tree."""
+    (tmp_path / "java").mkdir()
+    (tmp_path / "java" / "build.sh").write_text("exit 1\n")
+    jar = str(tmp_path / "jars" / "forkless-localfs.jar")
+    monkeypatch.setattr(session, "_default_jar_path", lambda: jar)
+    calls = []
+    monkeypatch.setattr("subprocess.run", lambda *a, **k: calls.append(a))
+    confs = cli.session_confs()
+    assert calls == []
+    assert "spark.hadoop.fs.file.impl" not in confs
+    assert session.CODE_CACHE_FLAG in confs["spark.driver.extraJavaOptions"]
+    # the engine recipe the benchmark harness applies still builds
+    session.engine_session_confs()
+    assert len(calls) == 1

@@ -104,7 +104,7 @@ def test_parquet_sink_database_layout(spark, tmp_path):
 
 
 def test_metrics_to_params_split(region_metrics):
-    tp, cp = metrics_to_params(region_metrics, ProfilerConfig())
+    tp, cp = metrics_to_params(region_metrics.collect(), ProfilerConfig())
     assert tp == {"DQP__Size": "5.0"}
     assert set(cp) == {"r_regionkey", "r_name"}
     assert cp["r_regionkey"]["DQP__Completeness"] == "1.0"
