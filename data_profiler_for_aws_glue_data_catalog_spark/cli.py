@@ -13,8 +13,8 @@ local/remote split made explicit:
 Lifecycle parity with runProfiler (Main.scala:164-254), in three phases:
 
 1. enumerate tables — ``--region`` set: remote Glue catalog (paginated,
-   boto3 import-gated); otherwise ONE ``spark.catalog.listTables`` call
-   on the session catalog;
+   boto3 import-gated); otherwise ONE ``SHOW TABLES`` listing of the
+   session catalog;
 2. profile — each table's ``profile_table`` plan executes exactly ONCE,
    collected JVM-side with ``DataFrame.toArrow()`` (the metrics relation
    is tiny: columns x metrics rows);

@@ -17,10 +17,21 @@ Design rules for cross-engine determinism:
   thing in Java regex (Spark) and RE2 (DuckDB).
 
 All expressions are built from pyspark.sql.functions only — JVM-side,
-whole-stage-codegen'd, no Python UDFs anywhere on this path.
+no Python UDFs anywhere on this path.
+
+Higher-order functions (transform/filter/aggregate) are the exception to
+whole-stage codegen: they run interpreted, with no common-subexpression
+elimination. Hence the rule: a HOF lambda reads only its own arguments.
+An outer array expression read inside a lambda is re-evaluated per
+element, so a ``tokens(text)`` expression indexed from a per-gram lambda
+re-tokenizes the document once per gram (quadratic in its length). Pass
+array operands that are projected columns, and let the lambda receive
+everything else it needs through its arguments (``arrays_zip``).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -40,24 +51,36 @@ def tokens(col: Column) -> Column:
     return F.filter(F.split(normalized(col), " "), lambda t: t != F.lit(""))
 
 
+def _word_grams(
+    toks: Column, n: int, per_gram: Callable[[Column], Column], empty_type: str
+) -> Column:
+    """Distinct ``per_gram(<space-joined gram>)`` over the word n-grams of
+    ``toks``; an ``empty_type`` empty array below n tokens.
+
+    The transform walks ``arrays_zip`` of the n shifted slices of ``toks``,
+    so gram i is the struct (toks[i], ..., toks[i+n-1]) and the lambda reads
+    only its own argument. ``toks`` should be a projected column (see the
+    module rules): every slice and every size reads it again.
+    """
+    m = F.size(toks) - F.lit(n - 1)
+    shifted = F.arrays_zip(*[F.slice(toks, k + 1, m) for k in range(n)])
+    grams = F.when(
+        F.size(toks) >= n,
+        F.transform(
+            shifted,
+            lambda z: per_gram(F.concat_ws(" ", *[z[str(k)] for k in range(n)])),
+        ),
+    ).otherwise(F.array().cast(empty_type))
+    return F.array_distinct(grams)
+
+
 def word_shingles(toks: Column, n: int) -> Column:
     """array<string> of space-joined word n-grams (deduplicated).
 
     Empty when the document has fewer than ``n`` tokens. Dedup makes the
     shingle *set* (Jaccard semantics) rather than the multiset.
     """
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-            # element_at per position instead of slice(): slice allocates a
-            # fresh sub-array per gram; O(1) element reads don't
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + F.lit(k)) for k in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
+    return _word_grams(toks, n, lambda g: g, "array<string>")
 
 
 def hashed_word_shingles(toks: Column, n: int) -> Column:
@@ -72,20 +95,9 @@ def hashed_word_shingles(toks: Column, n: int) -> Column:
     counts; use the string path if exactness to the last pair is required).
     Mirrored bit-for-bit by oracle_ext.hex60_to_long_sql.
     """
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-            lambda i: hex60_to_long(
-                F.md5(
-                    F.concat_ws(
-                        " ", *[F.element_at(toks, i + F.lit(k)) for k in range(n)]
-                    ).cast("binary")
-                )
-            ),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    return F.array_distinct(grams)
+    return _word_grams(
+        toks, n, lambda g: hex60_to_long(F.md5(g.cast("binary"))), "array<bigint>"
+    )
 
 
 def hex60_to_long(h: Column) -> Column:
@@ -95,19 +107,6 @@ def hex60_to_long(h: Column) -> Column:
     unsigned conv result well inside the positive bigint range.
     """
     return F.conv(F.substring(h, 1, 15), 16, 10).cast("bigint")
-
-
-def char_shingles(col: Column, n: int) -> Column:
-    """array<string> of distinct character n-grams of the normalized text."""
-    norm = normalized(col)
-    grams = F.when(
-        F.length(norm) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(norm) - F.lit(n - 1)),
-            lambda i: F.substring(norm, i, n),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
 
 
 def md5_hex(col: Column) -> Column:

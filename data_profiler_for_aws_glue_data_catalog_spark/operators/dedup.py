@@ -83,6 +83,15 @@ def _shingle_sets(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFr
     Projects to (id, text) before the parallelism guard so the one-time
     repartition (if any) moves only those two columns.
 
+    Tokenizes ONCE per document: ``tokens(text)`` is its own projected
+    column and the shingle kernel reads that column (its n shifted slices
+    and its size), never the tokenizer expression. Passing the expression
+    in would re-run lower/regexp_replace/split/filter once per reference
+    inside the interpreted kernel — one tokenization per gram, quadratic
+    in document length. The two projections stay separate in the optimized
+    plan because the token column is referenced several times and is not
+    cheap to inline.
+
     The result is persisted AND eagerly populated: every dedup operator
     built on shingle sets consumes them from MULTIPLE plan branches
     (hot-shingle cap, both self-join sides, the verify join), and Spark
@@ -99,8 +108,11 @@ def _shingle_sets(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFr
     per reference — measured 4x the whole materialize cost at sf0.1.
     """
     narrow = ensure_parallelism(docs.select(F.col(id_col), F.col(text_col)))
-    sh = X.hashed_word_shingles(X.tokens(F.col(text_col)), n)
-    raw = materialize(narrow.select(F.col(id_col).alias("id"), sh.alias("sh")))
+    toks = narrow.select(
+        F.col(id_col).alias("id"), X.tokens(F.col(text_col)).alias("toks")
+    )
+    sh = X.hashed_word_shingles(F.col("toks"), n)
+    raw = materialize(toks.select("id", sh.alias("sh")))
     return raw.withColumn("sz", F.size("sh")).where(F.col("sz") > 0)
 
 

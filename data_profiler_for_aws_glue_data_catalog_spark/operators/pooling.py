@@ -87,40 +87,3 @@ def mean_pool(
         )
         .select(*POOL_COLS)
     )
-
-
-def mean_pool_sql(
-    table: str,
-    key_col: str,
-    vec_col: str = "embedding",
-    expected_dim: int | None = None,
-) -> str:
-    """DuckDB mirror of :func:`mean_pool` (index explode via
-    range()+element access — DuckDB 1.0 lacks UNNEST WITH ORDINALITY;
-    list built back in dim order)."""
-    guard = (
-        f" AND len({vec_col}) = {expected_dim}" if expected_dim is not None else ""
-    )
-    xr = ROUND6.format(x="x")
-    mean = ROUND6.format(
-        x=f"CAST(SUM(CAST({xr} AS DECIMAL(27,6))) AS DOUBLE) / COUNT(x)"
-    )
-    return f"""
-WITH exploded AS (
-  SELECT CAST({key_col} AS VARCHAR) AS key,
-    i - 1 AS dim_i,
-    CASE WHEN isnan(CAST({vec_col}[i] AS DOUBLE))
-         OR isinf(CAST({vec_col}[i] AS DOUBLE)) THEN NULL
-         ELSE CAST({vec_col}[i] AS DOUBLE) END AS x
-  FROM {table},
-    UNNEST(range(1, len({vec_col}) + 1)) AS u(i)
-  WHERE {key_col} IS NOT NULL AND {vec_col} IS NOT NULL{guard}
-),
-per_dim AS (
-  SELECT key, dim_i, COUNT(*) AS _n, CAST({mean} AS DOUBLE) AS _m
-  FROM exploded GROUP BY key, dim_i
-)
-SELECT key, MAX(_n) AS n_vectors, COUNT(*) AS dim,
-  list(_m ORDER BY dim_i) AS pooled
-FROM per_dim GROUP BY key
-"""

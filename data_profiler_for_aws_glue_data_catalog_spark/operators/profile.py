@@ -88,32 +88,51 @@ def profile_database(
     return out
 
 
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _show_tables(spark: SparkSession, db_name: str) -> list[tuple[str, str]]:
+    """``(name, resolvable name)`` per table of a catalog database, from
+    ONE collect of ``SHOW TABLES`` — a command result, no Spark job.
+    (``Catalog.listTables`` drains a ``toLocalIterator``: 3 jobs a call.)
+
+    Temp views come back with an empty namespace and resolve unqualified;
+    metastore tables resolve as ``db.name``.
+    """
+    rows = spark.sql(f"SHOW TABLES IN {_quoted(db_name)}").collect()
+    return [
+        (
+            r.tableName,
+            f"{_quoted(r.namespace)}.{_quoted(r.tableName)}"
+            if r.namespace
+            else _quoted(r.tableName),
+        )
+        for r in rows
+    ]
+
+
 def list_catalog_tables(spark: SparkSession, db_name: str) -> list[str]:
     """Table names of a catalog database (Main.scala:188-190 local path).
 
     Unlike the reference's Glue enumeration (Glue.java:154-171) this is not
     limited to the first result page — the catalog API returns all tables.
     """
-    return [t.name for t in spark.catalog.listTables(db_name)]
+    return [name for name, _ in _show_tables(spark, db_name)]
 
 
 def catalog_tables(
     spark: SparkSession, db_name: str, names: list[str] | None = None
 ) -> dict[str, DataFrame]:
     """``{name: DataFrame}`` for the tables of a catalog database, from ONE
-    ``listTables`` call.
-
-    Temp views surface in ``listTables`` without a database — they resolve
-    unqualified (``spark.table(name)``); metastore tables resolve as
-    ``db.name``. ``names`` optionally restricts the result to a subset.
+    listing (resolution as in :func:`_show_tables`). ``names`` optionally
+    restricts the result to a subset.
     """
-    tables = {}
-    for t in spark.catalog.listTables(db_name):
-        if names is not None and t.name not in names:
-            continue
-        qualified = f"{t.database}.{t.name}" if t.database else t.name
-        tables[t.name] = spark.table(qualified)
-    return tables
+    return {
+        name: spark.table(qualified)
+        for name, qualified in _show_tables(spark, db_name)
+        if names is None or name in names
+    }
 
 
 def profile_catalog_database(

@@ -282,24 +282,6 @@ def lsh_topk(
     return _ranked_topk(scored, k)
 
 
-def ivf_assign(
-    embs: DataFrame,
-    n_cells: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, _v, _norm, cell): assign every vector to its nearest centroid.
-
-    Centroids are the vectors with the ``n_cells`` smallest ids —
-    deterministic seeding (k-means at scale; same plan shape). One tiny
-    collect for the centroids, then a purely map-side argmax — the plan has
-    no exchange before assignment (contrast: a crossJoin+window formulation
-    shuffles n_cells x the data by id).
-    """
-    e = _normed(embs, vec_col, id_col)
-    return assign_cells(e, collect_centroids(e, n_cells))
-
-
 def ivf_topk(
     embs: DataFrame,
     query_ids: list[int],

@@ -185,54 +185,16 @@ def ensure_parallelism(df: DataFrame, multiple: int = 1) -> DataFrame:
     return df
 
 
-# Cost floor for ensure_compute_parallelism: below this many input bytes the
-# serial stage is cheap enough that the round-robin exchange (its tasks, its
-# write+fetch, its barrier) costs more than it recovers. 2 MiB ~= a few
-# hundred-k narrow rows — measured crossover for the fused-agg/percentile
-# family on local[32] (r9). Env-overridable for other hosts; at 100 TB the
-# byte threshold is irrelevant because natural splits no-op the guard first.
+# Cost floor for spreading a split-starved scan (scan_metrics' column
+# batching): below this many input bytes the serial stage is cheap enough
+# that the extra jobs and their barriers cost more than they recover.
+# 2 MiB ~= a few hundred-k narrow rows — measured crossover for the
+# fused-agg/percentile family on local[32] (r9). Env-overridable for other
+# hosts; at 100 TB the byte threshold is irrelevant because natural splits
+# no-op the guard first.
 COMPUTE_GUARD_MIN_BYTES = int(
     os.environ.get("SPARK_GRAFT_COMPUTE_GUARD_MIN_BYTES", 2 << 20)
 )
-
-
-def ensure_compute_parallelism(
-    df: DataFrame, multiple: int = 1, min_bytes: int | None = None
-) -> DataFrame:
-    """``ensure_parallelism`` with a COST THRESHOLD — for aggregation-heavy
-    operators (fused profile aggs, exact percentiles, rank/CDF transforms)
-    whose input may be a split-starved scan (one parquet row group caps the
-    whole stage at one task no matter the cluster size).
-
-    Differences from :func:`ensure_parallelism` (the dedup-family guard):
-
-    - Only repartitions when the scan is ALSO at least ``min_bytes`` of
-      input (default ``COMPUTE_GUARD_MIN_BYTES``): tiny tables (dimension
-      tables, a 25-row nation file) run their serial agg in well under the
-      scheduling cost of 32 shuffle tasks, and a database-wide profile gets
-      its parallelism from running many such table chains concurrently —
-      repartitioning every small table measured ~6x SLOWER for the
-      10-table scan (scan_metrics.py scale note, r5).
-    - An in-memory source (no input files) is returned UNCHANGED: a
-      LocalRelation is literal-sized here (test frames, collected stats),
-      never the data-sized case, and its size cannot be compared against
-      the byte threshold anyway.
-
-    At 100 TB every table has thousands of natural splits, so this whole
-    guard is a planning-time no-op — it exists to make scan parallelism
-    scale-ADAPTIVE instead of assuming either the local or the cluster
-    shape (optimization guide §2).
-    """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * multiple
-    est = _estimate_scan(df)
-    if est is None:
-        return df
-    splits, nbytes = est
-    floor = COMPUTE_GUARD_MIN_BYTES if min_bytes is None else min_bytes
-    if splits < target and nbytes >= floor:
-        return df.repartition(target)
-    return df
 
 
 def materialize(df: DataFrame) -> DataFrame:

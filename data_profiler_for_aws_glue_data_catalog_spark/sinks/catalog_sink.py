@@ -139,6 +139,7 @@ class LocalMetadataCatalog:
             db: {t: vars(e) for t, e in tables.items()}
             for db, tables in self._dbs.items()
         }
+        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         tmp = self.path + ".tmp"
         with open(tmp, "w", encoding="utf-8") as f:
             json.dump(raw, f, indent=1, sort_keys=True)

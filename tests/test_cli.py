@@ -8,6 +8,10 @@ import pytest
 
 from data_profiler_for_aws_glue_data_catalog_spark import cli, sinks
 from data_profiler_for_aws_glue_data_catalog_spark.cli import run
+from data_profiler_for_aws_glue_data_catalog_spark.operators.profile import (
+    catalog_tables,
+    list_catalog_tables,
+)
 from data_profiler_for_aws_glue_data_catalog_spark.plans import session
 from tests.conftest import SF_SMOKE
 
@@ -189,6 +193,50 @@ def test_cli_profiles_each_table_once_for_both_sinks(spark, tmp_path, monkeypatc
             assert math.isnan(stored), r
         else:
             assert stored == r["value"], r
+
+
+def test_catalog_listing_is_one_job_with_the_same_names(spark, tmp_path):
+    """Enumeration returns the names ``Catalog.listTables`` returns, temp
+    views resolved unqualified and metastore tables as ``db.name``, in at
+    most one Spark job per call."""
+    db = "cli_listing_db"
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{tmp_path / db}'")
+    _views(spark, cli_listing_view=f"{SF_SMOKE}/region.parquet")
+    try:
+        spark.range(3).write.saveAsTable(f"{db}.stored")
+        expected = [t.name for t in spark.catalog.listTables(db)]
+        assert {"stored", "cli_listing_view"} <= set(expected)
+
+        names, frames = [], {}
+        list_jobs = _jobs_in_group(
+            spark, "cli_list", lambda: names.extend(list_catalog_tables(spark, db))
+        )
+        frame_jobs = _jobs_in_group(
+            spark, "cli_frames", lambda: frames.update(catalog_tables(spark, db))
+        )
+        assert names == expected
+        assert list(frames) == expected
+        assert len(list_jobs) <= 1 and len(frame_jobs) <= 1, (list_jobs, frame_jobs)
+        assert frames["stored"].count() == 3
+        assert frames["cli_listing_view"].count() == 5
+        assert list(catalog_tables(spark, db, ["stored"])) == ["stored"]
+    finally:
+        spark.catalog.dropTempView("cli_listing_view")
+        spark.sql(f"DROP DATABASE {db} CASCADE")
+
+
+def test_cli_catalog_json_creates_its_directory(spark, tmp_path):
+    """``--catalogJson`` under a directory that does not exist yet is
+    written, as ``--outputPrefix`` is."""
+    _views(spark, cli_nested_region=f"{SF_SMOKE}/region.parquet")
+    cat_path = tmp_path / "not" / "yet" / "catalog.json"
+    try:
+        rc = run(["--dbName", "default", "--catalogJson", str(cat_path)], spark=spark)
+    finally:
+        spark.catalog.dropTempView("cli_nested_region")
+    assert rc == 0
+    entry = json.load(open(cat_path))["default"]["cli_nested_region"]
+    assert entry["parameters"]["DQP__Size"] == "5.0"
 
 
 @pytest.mark.parametrize("mode", ["local", "region"])

@@ -80,6 +80,39 @@ def test_hot_shingles_observability(spark):
     assert len(hot) == 1 and hot[0]["df"] == 5
 
 
+def test_shingle_sets_match_oracle_across_lengths(spark):
+    """Hashed shingle sets equal the DuckDB mirror on documents of 0, n-1,
+    n and 2,000 tokens; the first two have no shingle and are dropped."""
+    import duckdb
+
+    from data_profiler_for_aws_glue_data_catalog_spark.oracle_ext import (
+        hashed_shingles_sql,
+        toks_sql,
+    )
+
+    n = 3
+    words = [f"W{i % 37}, x{i % 11}" for i in range(1000)]  # repeats grams
+    texts = ["  ...  ", "Alpha beta!", "alpha, BETA gamma", " ".join(words)]
+    got = {
+        r["id"]: (sorted(r["sh"]), r["sz"])
+        for r in D._shingle_sets(_docs(spark, texts), "text", "doc_id", n).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", list(enumerate(texts)))
+    want = {
+        i: (sorted(sh), len(sh))
+        for i, sh in con.execute(
+            f"SELECT doc_id, {hashed_shingles_sql(toks_sql('text'), n)} FROM docs"
+        ).fetchall()
+        if sh
+    }
+    con.close()
+    assert set(want) == {2, 3}
+    assert got == want
+    assert got[2][1] == 1 and got[3][1] < 1998  # distinct grams only
+
+
 def test_minhash_lsh_finds_identical(spark):
     df = _docs(
         spark,

@@ -76,6 +76,39 @@ def test_lsh_band_joins_are_equi(documents):
         assert "CartesianProduct" not in p
 
 
+def _lambda_bodies(plan: str):
+    """Text of every ``lambdafunction(...)`` call in a plan string."""
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        depth, i = 0, start + len("lambdafunction")
+        while True:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            if depth == 0:
+                break
+            i += 1
+        yield plan[start : i + 1]
+        start = plan.find("lambdafunction(", start + 1)
+
+
+def test_shingle_sets_tokenize_once(spark, monkeypatch):
+    """The shingle producer tokenizes each document once: the tokenizer's
+    regexp_replace appears once in the optimized plan and never inside a
+    lambda (higher-order functions run interpreted, so a tokenizer read
+    from a per-gram lambda re-runs once per gram)."""
+    materialized = []
+    materialize = D.materialize
+    monkeypatch.setattr(
+        D, "materialize", lambda df: materialized.append(df) or materialize(df)
+    )
+    docs = spark.createDataFrame([(0, "a b c d")], "doc_id bigint, text string")
+    D._shingle_sets(docs, "text", "doc_id", 3)
+    (shingled,) = materialized
+    p = shingled._jdf.queryExecution().optimizedPlan().toString()
+    assert p.count("regexp_replace(") == 1, p
+    bodies = list(_lambda_bodies(p))
+    assert bodies and not any("regexp_replace" in b for b in bodies), p
+
+
 def test_parquet_scan_pushdown(spark):
     """Filters and projections must reach the parquet scan: PushedFilters
     populated, ReadSchema pruned to the selected columns."""
