@@ -275,25 +275,25 @@ def _q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Product terms are ROUND6'd in double BEFORE the decimal cast (SURVEY
     §5: raw double->decimal conversion is engine-divergent on 7th-digit
     .5 boundaries; identity on the 2-dp testdata)."""
+    from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import SUM_DECIMAL
     from data_profiler_for_aws_glue_data_catalog_spark.operators.tpch import _dec6
 
     li = _t(spark, sf_dir, "lineitem")
-    dec = "decimal(27,6)"
     disc_price = _dec6("l_extendedprice * (1.0 - l_discount)")
     charge = _dec6("l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)")
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.sum(F.col("l_quantity").cast(dec)).cast("double").alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast(dec)).cast("double").alias("sum_base_price"),
+            F.sum(F.col("l_quantity").cast(SUM_DECIMAL)).cast("double").alias("sum_qty"),
+            F.sum(F.col("l_extendedprice").cast(SUM_DECIMAL)).cast("double").alias("sum_base_price"),
             F.sum(disc_price).cast("double").alias("sum_disc_price"),
             F.sum(charge).cast("double").alias("sum_charge"),
             F.try_divide(
-                F.sum(F.col("l_quantity").cast(dec)).cast("double"),
+                F.sum(F.col("l_quantity").cast(SUM_DECIMAL)).cast("double"),
                 F.count("l_quantity"),
             ).alias("avg_qty"),
             F.try_divide(
-                F.sum(F.col("l_discount").cast(dec)).cast("double"),
+                F.sum(F.col("l_discount").cast(SUM_DECIMAL)).cast("double"),
                 F.count("l_discount"),
             ).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
@@ -1781,6 +1781,7 @@ def _completeness_slices_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the column's global completeness — the 'which source broke this
     field' view. One grouped profile + one global profile (both fused),
     joined on the column key; gap is a fixed double ROUND6."""
+    from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import ROUND6
     from data_profiler_for_aws_glue_data_catalog_spark.operators.grouped_profile import grouped_profile
 
     ev = _t(spark, sf_dir, "events")
@@ -1797,16 +1798,12 @@ def _completeness_slices_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("instance").alias("column"),
         F.col("value").alias("global_completeness"),
     )
-    r6 = (  # mirror of the guarded ROUND6 template (specials pass through)
-        "CASE WHEN abs({x}) < 9.0e12 "
-        "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-    )
     return seg.join(F.broadcast(glob), "column").selectExpr(
         "segment",
         "`column`",
         "seg_completeness",
         "global_completeness",
-        f"cast({r6.format(x='seg_completeness - global_completeness')}"
+        f"cast({ROUND6.format(x='seg_completeness - global_completeness')}"
         " AS double) AS gap",
     )
 

@@ -193,29 +193,6 @@ def band_keys(signature: Column, n_bands: int, rows_per_band: int) -> Column:
     )
 
 
-def round6(col: Column) -> Column:
-    """Deterministic 6-dp rounding: floor(x * 1e6 + 0.5) / 1e6.
-
-    Engine round() implementations (JVM BigDecimal HALF_UP vs DuckDB's C
-    path) can disagree in the last ulp; this fixed IEEE expression is
-    reproduced exactly by the oracle. Intended for non-negative or
-    contract-defined values (it's floor-based, not half-away-from-zero).
-
-    Domain guard (r8, float-specials axis): Spark's ``floor`` on DOUBLE
-    returns BIGINT, silently saturating Infinity to Long.Max and NaN to
-    0, while DuckDB's floor propagates them — so NaN/±Inf (and finite
-    |x| >= 9e12, where 6-dp resolution exceeds double ulp anyway) pass
-    through unrounded on BOTH sides.
-    """
-    return F.when(
-        F.abs(col) < F.lit(9.0e12),
-        F.floor(col * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0),
-    ).otherwise(col)
-
-
-_HEX_DIGITS = "0123456789abcdef"
-
-
 def hex32_to_long(h: Column) -> Column:
     """bigint value of the first 8 hex chars of ``h`` (0 .. 2^32-1).
 

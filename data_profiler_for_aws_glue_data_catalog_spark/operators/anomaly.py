@@ -33,12 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
+    ROUND6,
+    SUM_DECIMAL,
 )
 
-_SUM_DEC = "decimal(27,6)"
 _SQ_DEC = "decimal(18,6)"
 _SQ_GUARD = "1e12"  # |value| beyond this: IEEE fallback (scan_metrics policy)
 
@@ -89,7 +88,7 @@ def detect_anomalies(
         f"false)"
     )
     s_dec = (
-        f"cast(sum(cast(_v AS {_SUM_DEC})) FILTER (WHERE {base}) AS double)"
+        f"cast(sum(cast(_v AS {SUM_DECIMAL})) FILTER (WHERE {base}) AS double)"
     )
     s2_dec = (
         f"cast(sum(cast(_v AS {_SQ_DEC}) * cast(_v AS {_SQ_DEC})) "

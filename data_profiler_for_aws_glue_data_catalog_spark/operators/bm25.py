@@ -34,10 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-)
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import ROUND6
 
 BM25_COLS = ["doc_id", "score", "n_terms_hit"]
 

@@ -26,10 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DEC = "decimal(27,6)"
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
+    ROUND6,
+    SUM_DECIMAL,
 )
 
 SHIFT_COLS = ["key", "n", "mean", "max_abs_cusum", "shift_at", "shift_pos"]
@@ -63,7 +62,7 @@ def mean_shift(
         F.col(key_col).cast("string").alias("key"),
         F.col(ts_col).alias("_ts"),
         F.col(id_col).alias("_id"),
-        F.expr(f"try_cast({value_col} AS {DEC})").alias("_x"),
+        F.expr(f"try_cast({value_col} AS {SUM_DECIMAL})").alias("_x"),
     )
     wk = (
         Window.partitionBy("key")

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 
 from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import (
     METRIC_COLS,
+    duck_str,
     metric_struct_sql,
     sql_ident,
     sql_str,
@@ -107,10 +108,6 @@ def compliance_metrics(
     )
 
 
-def _duck_str(v: str) -> str:
-    return "'" + v.replace("'", "''") + "'"
-
-
 def compliance_sql(
     table: str,
     rules: list[ComplianceRule] = (),
@@ -121,19 +118,19 @@ def compliance_sql(
     parts: list[str] = []
     for r in rules:
         parts.append(
-            f"SELECT 'Dataset' AS entity, {_duck_str(r.name)} AS instance, "
+            f"SELECT 'Dataset' AS entity, {duck_str(r.name)} AS instance, "
             f"'Compliance' AS name, "
             f"CAST(SUM(CASE WHEN ({r.predicate_sql}) THEN 1 ELSE 0 END) AS DOUBLE)"
             f" / COUNT(*) AS value, CAST(NULL AS VARCHAR) AS type FROM {table}"
         )
     for p in patterns:
         t = (column_types or {}).get(p.column)
-        t_sql = _duck_str(t) if t is not None else "CAST(NULL AS VARCHAR)"
+        t_sql = duck_str(t) if t is not None else "CAST(NULL AS VARCHAR)"
         parts.append(
-            f"SELECT 'Column' AS entity, {_duck_str(p.column)} AS instance, "
-            f"{_duck_str('PatternMatch.' + p.name)} AS name, "
+            f"SELECT 'Column' AS entity, {duck_str(p.column)} AS instance, "
+            f"{duck_str('PatternMatch.' + p.name)} AS name, "
             f"CAST(SUM(CASE WHEN {p.column} IS NOT NULL AND "
-            f"regexp_matches({p.column}, {_duck_str(p.pattern)}) "
+            f"regexp_matches({p.column}, {duck_str(p.pattern)}) "
             f"THEN 1 ELSE 0 END) AS DOUBLE) / COUNT({p.column}) AS value, "
             f"{t_sql} AS type FROM {table}"
         )
@@ -182,7 +179,7 @@ def windowed_compliance_sql(
     for r in rules:
         parts.append(
             f"SELECT {fmt_ws} AS window_start, {fmt_we} AS window_end, "
-            f"'Dataset' AS entity, {_duck_str(r.name)} AS instance, "
+            f"'Dataset' AS entity, {duck_str(r.name)} AS instance, "
             f"'Compliance' AS name, "
             f"CAST(SUM(CASE WHEN ({r.predicate_sql}) THEN 1 ELSE 0 END) AS DOUBLE)"
             f" / COUNT(*) AS value, CAST(NULL AS VARCHAR) AS type "
@@ -190,13 +187,13 @@ def windowed_compliance_sql(
         )
     for p in patterns:
         t = (column_types or {}).get(p.column)
-        t_sql = _duck_str(t) if t is not None else "CAST(NULL AS VARCHAR)"
+        t_sql = duck_str(t) if t is not None else "CAST(NULL AS VARCHAR)"
         parts.append(
             f"SELECT {fmt_ws} AS window_start, {fmt_we} AS window_end, "
-            f"'Column' AS entity, {_duck_str(p.column)} AS instance, "
-            f"{_duck_str('PatternMatch.' + p.name)} AS name, "
+            f"'Column' AS entity, {duck_str(p.column)} AS instance, "
+            f"{duck_str('PatternMatch.' + p.name)} AS name, "
             f"CAST(SUM(CASE WHEN {p.column} IS NOT NULL AND "
-            f"regexp_matches({p.column}, {_duck_str(p.pattern)}) "
+            f"regexp_matches({p.column}, {duck_str(p.pattern)}) "
             f"THEN 1 ELSE 0 END) AS DOUBLE) / COUNT({p.column}) AS value, "
             f"{t_sql} AS type FROM {w} GROUP BY ws"
         )
@@ -272,7 +269,7 @@ def violation_samples_sql(
 ) -> str:
     """DuckDB mirror: per-rule ordered LIMIT probes."""
     parts = [
-        f"SELECT {_duck_str(r.name)} AS rule, {id_col} AS id FROM {table} "
+        f"SELECT {duck_str(r.name)} AS rule, {id_col} AS id FROM {table} "
         f"WHERE NOT COALESCE(({r.predicate_sql}), FALSE) "
         f"ORDER BY {id_col} LIMIT {k}"
         for r in rules

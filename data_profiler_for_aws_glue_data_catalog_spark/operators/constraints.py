@@ -27,7 +27,7 @@ Execution shape (100 TB notes)
   data scale; one small shuffle to pivot per-column metrics.
 
 Determinism: metric values are emitted through the engine's fixed
-floor-based 6-dp rounding (functions.text.round6 shape) and the
+floor-based 6-dp rounding (functions.rounding.ROUND6) and the
 sum/mean constraints reuse the exact-decimal accumulation expressions
 from operators.scan_metrics, so verification output hash-matches the
 DuckDB oracle (oracle_ext.verification_sql mirrors term-by-term).
@@ -44,14 +44,14 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
+    ROUND6,
+    SUM_DECIMAL,
 )
 
 # Exact-decimal deterministic aggregates — keep in sync with
-# operators/scan_metrics.py (Spark side) and oracle.py (DuckDB side).
-_SUM_DEC_SPARK = "decimal(27,6)"
+# functions/rounding.py + operators/scan_metrics.py (Spark side) and
+# oracle.py (DuckDB side).
 _SUM_DEC_DUCK = "DECIMAL(27,6)"
 _SUM_GUARD = "1e21"
 _SUM_FLOOR = "1e-3"  # below: 6-dp rounding dominates -> IEEE branch
@@ -68,7 +68,7 @@ def _in_domain(c: str) -> str:
 
 
 def _det_sum_spark(c: str) -> str:
-    dec = f"cast(sum(try_cast({c} AS {_SUM_DEC_SPARK})) AS double)"
+    dec = f"cast(sum(try_cast({c} AS {SUM_DECIMAL})) AS double)"
     return (
         f"CASE WHEN {_in_domain(c)} THEN {dec} "
         f"ELSE sum(cast({c} AS double)) END"
@@ -85,7 +85,7 @@ def _det_sum_duck(c: str) -> str:
 
 def _det_mean_spark(c: str) -> str:
     dec = (
-        f"try_divide(cast(sum(try_cast({c} AS {_SUM_DEC_SPARK})) AS double), "
+        f"try_divide(cast(sum(try_cast({c} AS {SUM_DECIMAL})) AS double), "
         f"count({c}))"
     )
     return (

@@ -27,12 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import ROUND6
 from data_profiler_for_aws_glue_data_catalog_spark.operators.dedup import _shingle_sets
-
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-)
 
 CONTAMINATION_COLS = [
     "id", "n_shingles", "n_hit", "containment", "is_contaminated",

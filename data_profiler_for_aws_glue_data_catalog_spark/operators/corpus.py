@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_profiler_for_aws_glue_data_catalog_spark.functions import text as X
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import round6
 from data_profiler_for_aws_glue_data_catalog_spark.operators.text_analysis import (
     lang_pred_column,
     quality_columns,
@@ -47,7 +48,7 @@ def clean_corpus(
     t = docs.select(
         F.col(id_col).alias("id"),
         lang_pred_column(toks).alias("lang_pred"),
-        X.round6(quality_columns(F.col(text_col), toks)["quality"]).alias(
+        round6(quality_columns(F.col(text_col), toks)["quality"]).alias(
             "quality"
         ),
         X.md5_hex(X.normalized(F.col(text_col))).alias("content_md5"),

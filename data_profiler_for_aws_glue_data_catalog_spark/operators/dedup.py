@@ -49,6 +49,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_profiler_for_aws_glue_data_catalog_spark.functions import text as X
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
+    ROUND6,
+    round6,
+)
 from data_profiler_for_aws_glue_data_catalog_spark.plans.partitioning import (
     ensure_parallelism,
     materialize,
@@ -117,7 +121,7 @@ def _shingle_sets(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFr
 
 
 def _pair_jaccard(co: Column, sa: Column, sb: Column) -> Column:
-    return X.round6(
+    return round6(
         F.try_divide(
             co.cast("double"), (sa + sb - co).cast("double")
         )
@@ -229,6 +233,22 @@ def minhash_lsh_near_duplicates(
         if shingle_base is not None
         else _shingle_sets(docs, text_col, id_col, n)
     )
+    keyed = _lsh_band_keys(base, n_hashes, n_bands, rows_per_band)
+    a, b = keyed.alias("a"), keyed.alias("b")
+    cand = (
+        a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id")))
+        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
+        .distinct()
+    )
+    return _verified_pairs(cand, base, threshold)
+
+
+def _lsh_band_keys(
+    base: DataFrame, n_hashes: int, n_bands: int, rows_per_band: int
+) -> DataFrame:
+    """(id, bk): one row per document and LSH band key of its MinHash
+    signature. The signature pass over the shingle base is materialized
+    once; both self-join sides read it."""
     # 32-bit per-shingle hash for the affine MinHash family = the low 32
     # bits of the 60-bit shingle hash (independent md5 bits) — no extra md5.
     h32 = F.pmod(F.col("h"), F.lit(X.M32).cast("bigint"))
@@ -240,15 +260,14 @@ def minhash_lsh_near_duplicates(
             "id", F.array(*[F.col(f"mh{i}") for i in range(n_hashes)]).alias("sig")
         )
     )
-    keyed = sig.select(
+    return sig.select(
         "id", F.explode(X.band_keys(F.col("sig"), n_bands, rows_per_band)).alias("bk")
     )
-    a, b = keyed.alias("a"), keyed.alias("b")
-    cand = (
-        a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-        .distinct()
-    )
+
+
+def _verified_pairs(cand: DataFrame, base: DataFrame, threshold: float) -> DataFrame:
+    """Candidate (doc_a, doc_b) pairs kept when their exact shingle-set
+    Jaccard (read from the shingle base) is >= threshold."""
     sets = base.select("id", "sh", "sz")
     verified = (
         cand.join(sets.alias("sa"), F.col("doc_a") == F.col("sa.id"))
@@ -382,7 +401,7 @@ def entity_normed(
 
 
 def _pair_cosine(va: Column, na: Column, vb: Column, nb: Column) -> Column:
-    return X.round6(dot(va, vb) / (na * nb))
+    return round6(dot(va, vb) / (na * nb))
 
 
 def embedding_near_duplicates(
@@ -457,10 +476,6 @@ def dedup_summary(
     One shuffle: groupBy(content hash) sizes, then a tiny fused
     aggregate — no window, no join, screen-sized output at any scale.
     """
-    ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-)
     h = X.md5_hex(X.normalized(F.col(text_col)))
     groups = docs.select(h.alias("content_md5")).groupBy("content_md5").agg(
         F.count(F.lit(1)).alias("sz")
@@ -571,18 +586,7 @@ def minhash_lsh_incremental(
     """
     assert n_hashes == n_bands * rows_per_band
     base = _shingle_sets(docs, text_col, id_col, n)
-    h32 = F.pmod(F.col("h"), F.lit(X.M32).cast("bigint"))
-    sig = materialize(
-        base.select("id", F.explode("sh").alias("h"))
-        .groupBy("id")
-        .agg(*X.minhash_agg_exprs(h32, n_hashes))
-        .select(
-            "id", F.array(*[F.col(f"mh{i}") for i in range(n_hashes)]).alias("sig")
-        )
-    )
-    keyed = sig.select(
-        "id", F.explode(X.band_keys(F.col("sig"), n_bands, rows_per_band)).alias("bk")
-    )
+    keyed = _lsh_band_keys(base, n_hashes, n_bands, rows_per_band)
     new_ids = docs.where(is_new).select(F.col(id_col).alias("id")).distinct()
     new_keyed = keyed.join(F.broadcast(new_ids), "id", "leftsemi")
     a, b = new_keyed.alias("a"), keyed.alias("b")
@@ -594,18 +598,4 @@ def minhash_lsh_incremental(
         )
         .distinct()
     )
-    sets = base.select("id", "sh", "sz")
-    verified = (
-        cand.join(sets.alias("sa"), F.col("doc_a") == F.col("sa.id"))
-        .join(sets.alias("sb"), F.col("doc_b") == F.col("sb.id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            _pair_jaccard(
-                F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh"))),
-                F.col("sa.sz"),
-                F.col("sb.sz"),
-            ).alias("jaccard"),
-        )
-    )
-    return verified.where(F.col("jaccard") >= threshold)
+    return _verified_pairs(cand, base, threshold)

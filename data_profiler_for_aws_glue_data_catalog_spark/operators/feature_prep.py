@@ -25,16 +25,12 @@ before any cross-engine comparison or argmax).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import ROUND6
 from data_profiler_for_aws_glue_data_catalog_spark.functions.text import normalized
 from data_profiler_for_aws_glue_data_catalog_spark.operators.sampling import SPLIT_COL, train_test_split
-
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-)
 
 LEAKAGE_COLS = [
     "n_train", "n_test", "n_leaked_test_rows", "n_leaked_contents"

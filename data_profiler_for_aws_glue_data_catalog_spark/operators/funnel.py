@@ -29,12 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import ROUND6
 from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import sql_str
-
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-)
 
 _MIN_LONG = "-9223372036854775807"
 
@@ -249,15 +245,11 @@ def funnel_step_times(
             )
         ).alias("_i", "gap")
     ).select((F.col("_i") + 2).alias("step"), "gap")
-    r6 = (  # mirror of the guarded ROUND6 template (specials pass through)
-        "CASE WHEN abs({x}) < 9.0e12 "
-        "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-    )
     out = gaps.groupBy("step").agg(
         F.count(F.lit(1)).alias("n_entities"),
         F.expr("percentile(gap, 0.5D)").alias("median_gap_s"),
         F.expr(
-            "cast(" + r6.format(
+            "cast(" + ROUND6.format(
                 x="cast(sum(cast(gap AS decimal(27,6))) AS double) / count(gap)"
             ) + " AS double)"
         ).alias("mean_gap_s"),
@@ -287,11 +279,7 @@ def funnel_step_times_sql(
         f"FROM m{k} JOIN m{k - 1} ON m{k}.u = m{k - 1}.u"
         for k in range(2, len(steps) + 1)
     )
-    r6 = (  # mirror of the guarded ROUND6 template (specials pass through)
-        "CASE WHEN abs({x}) < 9.0e12 "
-        "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-    )
-    mean = r6.format(
+    mean = ROUND6.format(
         x="CAST(SUM(CAST(gap AS DECIMAL(27,6))) AS DOUBLE) / COUNT(gap)"
     )
     return f"""

@@ -50,10 +50,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from data_profiler_for_aws_glue_data_catalog_spark.config import ProfilerConfig
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import SUM_DECIMAL
 from data_profiler_for_aws_glue_data_catalog_spark.operators import types as T
 from data_profiler_for_aws_glue_data_catalog_spark.operators.scan_metrics import (
     SQ_DECIMAL,
-    SUM_DECIMAL,
     _SQ_GUARD_SQL,
     _SUM_FLOOR_SQL,
     _SUM_GUARD_SQL,

@@ -29,17 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import ROUND6
 from data_profiler_for_aws_glue_data_catalog_spark.operators.type_inference import (
     BOOL_RE,
     FRAC_RE,
     INT_RE,
 )
-from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import sql_ident, sql_str
-
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-)
+from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import duck_str, sql_ident, sql_str
 
 JSON_COLS = [
     "key", "n_present", "presence_ratio",
@@ -77,10 +73,6 @@ def json_profile(df: DataFrame, col: str) -> DataFrame:
     )
 
 
-def _duck_str(v: str) -> str:
-    return "'" + v.replace("'", "''") + "'"
-
-
 def json_profile_sql(table: str, col: str) -> str:
     """DuckDB mirror: json_keys + unnest + per-key extraction."""
     ratio = "CAST(n_present AS DOUBLE) / CAST(_total AS DOUBLE)"
@@ -97,9 +89,9 @@ SELECT key, n_present,
   n_present - n_boolean - n_integral - n_fractional AS n_other
 FROM (
   SELECT key, count(*) AS n_present,
-    count(CASE WHEN regexp_matches(val, {_duck_str(BOOL_RE)}) THEN 1 END) AS n_boolean,
-    count(CASE WHEN regexp_matches(val, {_duck_str(INT_RE)}) THEN 1 END) AS n_integral,
-    count(CASE WHEN regexp_matches(val, {_duck_str(FRAC_RE)}) THEN 1 END) AS n_fractional
+    count(CASE WHEN regexp_matches(val, {duck_str(BOOL_RE)}) THEN 1 END) AS n_boolean,
+    count(CASE WHEN regexp_matches(val, {duck_str(INT_RE)}) THEN 1 END) AS n_integral,
+    count(CASE WHEN regexp_matches(val, {duck_str(FRAC_RE)}) THEN 1 END) AS n_fractional
   FROM pairs GROUP BY key
 ), total
 """

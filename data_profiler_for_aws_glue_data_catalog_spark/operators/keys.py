@@ -31,12 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import sql_ident, sql_str
-
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-)
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import ROUND6
+from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import duck_str, sql_ident, sql_str
 
 KEY_COLS = [
     "key_cols", "n_rows", "n_complete", "n_distinct", "uniqueness", "is_key",
@@ -74,10 +70,6 @@ def candidate_keys(df: DataFrame, col_sets: list[list[str]]) -> DataFrame:
     return row.selectExpr(f"inline(array({', '.join(structs)}))").select(*KEY_COLS)
 
 
-def _duck_str(v: str) -> str:
-    return "'" + v.replace("'", "''") + "'"
-
-
 def candidate_keys_sql(table: str, col_sets: list[list[str]]) -> str:
     """DuckDB mirror: COUNT(DISTINCT (tuple)) filtered to complete rows."""
     parts = []
@@ -90,7 +82,7 @@ def candidate_keys_sql(table: str, col_sets: list[list[str]]) -> str:
             "CAST(n_distinct AS DOUBLE) / CAST(n_complete AS DOUBLE) END"
         )
         parts.append(f"""
-SELECT {_duck_str(_label(cols))} AS key_cols, n_rows, n_complete, n_distinct,
+SELECT {duck_str(_label(cols))} AS key_cols, n_rows, n_complete, n_distinct,
   CAST({ROUND6.format(x=uniq)} AS DOUBLE) AS uniqueness,
   (n_complete = n_rows AND n_distinct = n_rows) AS is_key
 FROM (

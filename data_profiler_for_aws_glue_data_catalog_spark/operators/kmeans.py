@@ -26,14 +26,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_profiler_for_aws_glue_data_catalog_spark.functions import text as X
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
+    SUM_DECIMAL,
+    round6,
+)
 from data_profiler_for_aws_glue_data_catalog_spark.operators.dedup import entity_normed
 from data_profiler_for_aws_glue_data_catalog_spark.operators.similarity import (
     assign_cells,
     collect_centroids,
 )
-
-_SUM_DEC = "decimal(27,6)"
 
 
 def centroids_from_rows(rows) -> list[tuple[int, list[float], float]]:
@@ -127,7 +128,7 @@ def kmeans_step(
     )
     # same decimal-accumulation mirror pair as scan_metrics: Spark
     # try_cast(x AS decimal) == DuckDB CAST(x AS DECIMAL), floor-based ROUND6
-    dec_sum = F.expr(f"cast(sum(try_cast(x AS {_SUM_DEC})) AS double)")
+    dec_sum = F.expr(f"cast(sum(try_cast(x AS {SUM_DECIMAL})) AS double)")
     return (
         by_dim.groupBy("cell", "dim")
         .agg(
@@ -137,7 +138,7 @@ def kmeans_step(
         .select(
             "cell",
             "dim",
-            X.round6(F.col("_mean")).alias("value"),
+            round6(F.col("_mean")).alias("value"),
             "n_members",
         )
     )

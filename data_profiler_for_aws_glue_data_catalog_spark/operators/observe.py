@@ -45,11 +45,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_profiler_for_aws_glue_data_catalog_spark.config import ProfilerConfig
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import SUM_DECIMAL
 from data_profiler_for_aws_glue_data_catalog_spark.operators import types as T
 from data_profiler_for_aws_glue_data_catalog_spark.operators.scan_metrics import (
     SQ_DECIMAL,
     SQ_GUARD,
-    SUM_DECIMAL,
     SUM_GUARD,
     quantile_name,
     quantile_points,

@@ -23,10 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEC = "decimal(27,6)"
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
+    ROUND6,
+    SUM_DECIMAL,
 )
 
 POOL_COLS = ["key", "n_vectors", "dim", "pooled"]
@@ -69,7 +68,7 @@ def mean_pool(
         F.count(F.lit(1)).alias("_n"),
         F.expr(
             "cast(" + ROUND6.format(
-                x=f"cast(sum(try_cast({xr} AS {DEC})) AS double) / count(x)"
+                x=f"cast(sum(try_cast({xr} AS {SUM_DECIMAL})) AS double) / count(x)"
             ) + " AS double)"
         ).alias("_m"),
     )

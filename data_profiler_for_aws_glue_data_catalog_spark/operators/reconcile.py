@@ -19,10 +19,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-DEC = "decimal(27,6)"
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
+    ROUND6,
+    SUM_DECIMAL,
 )
 
 RECON_COLS = ["key", "header_total", "detail_total", "diff", "status"]
@@ -62,7 +61,7 @@ def reconcile_totals(
     d = (
         detail.where(F.col(detail_key).isNotNull())
         .select(F.col(detail_key).alias("key"), detail_expr.alias("_raw"))
-        .selectExpr("key", f"CAST({ROUND6.format(x='_raw')} AS {DEC}) AS _x")
+        .selectExpr("key", f"CAST({ROUND6.format(x='_raw')} AS {SUM_DECIMAL}) AS _x")
         .groupBy("key")
         .agg(F.sum("_x").cast("double").alias("detail_total"))
     )

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DEC = "decimal(27,6)"
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import SUM_DECIMAL
 
 OHLC_COLS = [
     "key", "bucket_start", "open", "high", "low", "close", "vsum", "n"
@@ -71,7 +71,7 @@ def resample_ohlc(
             # axis): NaN/±Inf/huge buckets take the IEEE double sum
             F.expr(
                 f"CASE WHEN coalesce(max(abs(_v)) < 1e21, true) "
-                f"THEN cast(sum(try_cast(_v AS {DEC})) AS double) "
+                f"THEN cast(sum(try_cast(_v AS {SUM_DECIMAL})) AS double) "
                 f"ELSE sum(_v) END"
             ).alias("vsum"),
             F.count(F.lit(1)).alias("n"),

@@ -25,12 +25,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
+    ROUND6,
+    SUM_DECIMAL,
 )
-
-_DEC = "decimal(27,6)"
 
 ROLLING_COLS = [
     "entity_id", "ts", "value", "w_count", "w_sum", "w_mean",
@@ -47,7 +45,7 @@ def rolling_stats(
     """Per event: trailing ``window_seconds`` count/sum/mean of
     ``value_col`` over the same entity (current row included)."""
     vr = ROUND6.format(x=f"cast({value_col} AS double)")
-    vd = f"try_cast({vr} AS {_DEC})"
+    vd = f"try_cast({vr} AS {SUM_DECIMAL})"
     frame = (
         f"PARTITION BY {entity_col} ORDER BY cast({ts_col} AS long) "
         f"RANGE BETWEEN {window_seconds} PRECEDING AND CURRENT ROW"

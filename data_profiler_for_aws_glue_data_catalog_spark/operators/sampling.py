@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import ROUND6
 from data_profiler_for_aws_glue_data_catalog_spark.functions.text import M32, hex32_to_long
 
 SPLIT_COL = "split"
@@ -246,10 +247,6 @@ def aqp_mean_estimate(
     s = deterministic_sample(df, rate, id_col, seed).where(
         F.col(value_col).isNotNull()
     )
-    r6 = (  # mirror of the guarded ROUND6 template (specials pass through)
-        "CASE WHEN abs({x}) < 9.0e12 "
-        "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-    )
     agg = s.agg(
         F.count(F.lit(1)).alias("n_sample"),
         F.expr(
@@ -266,10 +263,10 @@ def aqp_mean_estimate(
     return agg.selectExpr(
         "n_sample",
         f"cast({rate!r} AS double) AS sample_rate",
-        f"cast({r6.format(x=mean)} AS double) AS mean_est",
-        f"cast({r6.format(x=f'{mean} - {half}')} AS double) AS ci_low",
-        f"cast({r6.format(x=f'{mean} + {half}')} AS double) AS ci_high",
-        f"cast({r6.format(x=f'_s / {rate!r}')} AS double) AS sum_est",
+        f"cast({ROUND6.format(x=mean)} AS double) AS mean_est",
+        f"cast({ROUND6.format(x=f'{mean} - {half}')} AS double) AS ci_low",
+        f"cast({ROUND6.format(x=f'{mean} + {half}')} AS double) AS ci_high",
+        f"cast({ROUND6.format(x=f'_s / {rate!r}')} AS double) AS sum_est",
     )
 
 
@@ -283,10 +280,6 @@ def aqp_mean_estimate_sql(
     """DuckDB mirror of :func:`aqp_mean_estimate` (same hash sample)."""
     from data_profiler_for_aws_glue_data_catalog_spark.oracle_ext import sample_sql
 
-    r6 = (  # mirror of the guarded ROUND6 template (specials pass through)
-        "CASE WHEN abs({x}) < 9.0e12 "
-        "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-    )
     mean = "(_s / n_sample)"
     var = f"greatest(_s2 / n_sample - {mean} * {mean}, 0.0)"
     half = f"(1.96 * sqrt({var}) / sqrt(CAST(n_sample AS DOUBLE)))"
@@ -302,9 +295,9 @@ agg AS (
 )
 SELECT n_sample,
   CAST({rate!r} AS DOUBLE) AS sample_rate,
-  CAST({r6.format(x=mean)} AS DOUBLE) AS mean_est,
-  CAST({r6.format(x=f'{mean} - {half}')} AS DOUBLE) AS ci_low,
-  CAST({r6.format(x=f'{mean} + {half}')} AS DOUBLE) AS ci_high,
-  CAST({r6.format(x=f'_s / {rate!r}')} AS DOUBLE) AS sum_est
+  CAST({ROUND6.format(x=mean)} AS DOUBLE) AS mean_est,
+  CAST({ROUND6.format(x=f'{mean} - {half}')} AS DOUBLE) AS ci_low,
+  CAST({ROUND6.format(x=f'{mean} + {half}')} AS DOUBLE) AS ci_high,
+  CAST({ROUND6.format(x=f'_s / {rate!r}')} AS DOUBLE) AS sum_est
 FROM agg
 """

@@ -61,6 +61,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from data_profiler_for_aws_glue_data_catalog_spark.config import ProfilerConfig
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import SUM_DECIMAL
 from data_profiler_for_aws_glue_data_catalog_spark.operators import types as T
 from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import (
     METRIC_COLS,
@@ -72,9 +73,7 @@ from data_profiler_for_aws_glue_data_catalog_spark.plans.partitioning import (
     _estimate_scan,
 )
 
-# Exact accumulation types: values are rounded to 6 decimal places on cast,
-# sums stay exact (decimal add is associative -> partition-order invariant).
-SUM_DECIMAL = "decimal(27,6)"  # sum fits decimal(37,6): ~1e31 headroom
+# Exact accumulation type for squares (sums: rounding.SUM_DECIMAL).
 SQ_DECIMAL = "decimal(18,6)"  # squares -> decimal(37,12), sum decimal(38,12)
 
 # Value-domain guards for the exact-decimal paths. Inputs are try_cast so a

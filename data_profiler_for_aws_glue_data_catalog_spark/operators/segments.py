@@ -19,10 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-)
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import ROUND6
 
 SEGMENT_DEV_COLS = [
     "segment", "n", "seg_mean", "overall_mean", "abs_diff", "rel_diff",
@@ -103,10 +100,6 @@ def pareto_analysis(
     ``in_top80`` includes the boundary key that crosses 0.8 (ceiling
     semantics: the minimal covering prefix).
     """
-    r6 = (  # mirror of the guarded ROUND6 template (specials pass through)
-        "CASE WHEN abs({x}) < 9.0e12 "
-        "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-    )
     sums = (
         df.where(F.col(key_col).isNotNull() & F.col(value_col).isNotNull())
         .groupBy(F.col(key_col).cast("string").alias("key"))
@@ -137,12 +130,12 @@ def pareto_analysis(
         .selectExpr(
             "key",
             "ksum",
-            f"cast({r6.format(x='ksum / _t')} AS double) AS share",
-            f"cast({r6.format(x='_cum / _t')} AS double) AS cum_share",
+            f"cast({ROUND6.format(x='ksum / _t')} AS double) AS share",
+            f"cast({ROUND6.format(x='_cum / _t')} AS double) AS cum_share",
             "rank",
             # minimal covering prefix: everything BEFORE this key covers
             # < 0.8 of the total
-            f"cast({r6.format(x='(_cum - ksum) / _t')} AS double) < 0.8"
+            f"cast({ROUND6.format(x='(_cum - ksum) / _t')} AS double) < 0.8"
             " AS in_top80",
         )
         .select(*PARETO_COLS)
@@ -151,10 +144,6 @@ def pareto_analysis(
 
 def pareto_analysis_sql(table: str, key_col: str, value_col: str) -> str:
     """DuckDB mirror of :func:`pareto_analysis`."""
-    r6 = (  # mirror of the guarded ROUND6 template (specials pass through)
-        "CASE WHEN abs({x}) < 9.0e12 "
-        "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-    )
     return f"""
 WITH sums AS (
   SELECT CAST({key_col} AS VARCHAR) AS key,
@@ -173,9 +162,9 @@ cum AS (
   FROM sums CROSS JOIN tot
 )
 SELECT key, ksum,
-  CAST({r6.format(x='ksum / _t')} AS DOUBLE) AS share,
-  CAST({r6.format(x='_cum / _t')} AS DOUBLE) AS cum_share,
+  CAST({ROUND6.format(x='ksum / _t')} AS DOUBLE) AS share,
+  CAST({ROUND6.format(x='_cum / _t')} AS DOUBLE) AS cum_share,
   rank,
-  CAST({r6.format(x='(_cum - ksum) / _t')} AS DOUBLE) < 0.8 AS in_top80
+  CAST({ROUND6.format(x='(_cum - ksum) / _t')} AS DOUBLE) < 0.8 AS in_top80
 FROM cum
 """

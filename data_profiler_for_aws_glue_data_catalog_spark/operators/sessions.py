@@ -39,9 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# decimal accumulation for the deterministic value sum — same policy as
-# scan_metrics.SUM_DECIMAL
-_SUM_DEC = "decimal(27,6)"
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import SUM_DECIMAL
 
 
 def _clean(
@@ -110,7 +108,7 @@ def session_stats(
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.expr(
-                f"cast(sum(try_cast(`{value_col}` as {_SUM_DEC})) as double)"
+                f"cast(sum(try_cast(`{value_col}` as {SUM_DECIMAL})) as double)"
             ).alias("sum_value"),
         )
         .select(
@@ -143,7 +141,7 @@ def session_stats_stream(
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.expr(
-                f"cast(sum(try_cast(`{value_col}` as {_SUM_DEC})) as double)"
+                f"cast(sum(try_cast(`{value_col}` as {SUM_DECIMAL})) as double)"
             ).alias("sum_value"),
         )
         .select(

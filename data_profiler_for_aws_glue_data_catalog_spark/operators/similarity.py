@@ -38,7 +38,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_profiler_for_aws_glue_data_catalog_spark.functions import text as X
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
+    ROUND6,
+    round6,
+)
 from data_profiler_for_aws_glue_data_catalog_spark.operators.dedup import dot
 from data_profiler_for_aws_glue_data_catalog_spark.plans.partitioning import (
     materialize_wide,
@@ -46,7 +49,7 @@ from data_profiler_for_aws_glue_data_catalog_spark.plans.partitioning import (
 
 
 def _cos(va: Column, na: Column, vb: Column, nb: Column) -> Column:
-    return X.round6(dot(va, vb) / (na * nb))
+    return round6(dot(va, vb) / (na * nb))
 
 
 def _normed(embs: DataFrame, vec_col: str, id_col: str) -> DataFrame:
@@ -401,10 +404,6 @@ def truncation_recall(
         id_col,
     ).select("query_id", "neighbor_id")
     hit = full.join(trunc, ["query_id", "neighbor_id"], "leftsemi")
-    r6 = (  # mirror of the guarded ROUND6 template (specials pass through)
-        "CASE WHEN abs({x}) < 9.0e12 "
-        "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-    )
     per_q = full.groupBy("query_id").agg(F.count(F.lit(1)).alias("k"))
     ov = hit.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_overlap"))
     return (
@@ -413,7 +412,7 @@ def truncation_recall(
             "query_id",
             "k",
             "coalesce(n_overlap, 0) AS n_overlap",
-            f"cast({r6.format(x='CAST(coalesce(n_overlap, 0) AS DOUBLE) / k')} AS double)"
+            f"cast({ROUND6.format(x='CAST(coalesce(n_overlap, 0) AS DOUBLE) / k')} AS double)"
             " AS recall",
         )
     )
@@ -446,16 +445,12 @@ def ivf_inertia(
         "cell",
         _cos(F.col("_v"), F.col("_norm"), pick["cv"], pick["cn"]).alias("cos"),
     )
-    r6 = (  # mirror of the guarded ROUND6 template (specials pass through)
-        "CASE WHEN abs({x}) < 9.0e12 "
-        "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-    )
     return (
         scored.groupBy("cell")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
             F.expr(
-                "cast(" + r6.format(
+                "cast(" + ROUND6.format(
                     x="cast(sum(try_cast(cos AS decimal(27,6))) AS double)"
                     " / count(cos)"
                 ) + " AS double)"

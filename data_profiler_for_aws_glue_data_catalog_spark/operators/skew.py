@@ -33,12 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import sql_ident, sql_str
-
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-)
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import ROUND6
+from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import duck_str, sql_ident, sql_str
 
 SUMMARY_COLS = [
     "key_col", "n_rows", "n_keys", "max_cnt", "avg_cnt",
@@ -119,17 +115,13 @@ def hot_keys(df: DataFrame, keys: list[str], k: int = 10) -> DataFrame:
     )
 
 
-def _duck_str(v: str) -> str:
-    return "'" + v.replace("'", "''") + "'"
-
-
 def skew_summary_sql(table: str, keys: list[str]) -> str:
     """DuckDB mirror of skew_summary."""
     avg = "CAST(n_rows AS DOUBLE) / CAST(n_keys AS DOUBLE)"
     skew = f"CAST(max_cnt AS DOUBLE) / ({avg})"
     parts = [
         f"""
-SELECT {_duck_str(k)} AS key_col, n_rows, n_keys, max_cnt,
+SELECT {duck_str(k)} AS key_col, n_rows, n_keys, max_cnt,
   CAST({ROUND6.format(x=avg)} AS DOUBLE) AS avg_cnt,
   CAST({ROUND6.format(x=skew)} AS DOUBLE) AS skew_ratio,
   CAST({ROUND6.format(x='p50')} AS DOUBLE) AS p50_cnt,
@@ -150,7 +142,7 @@ def hot_keys_sql(table: str, keys: list[str], k: int = 10) -> str:
     """DuckDB mirror of hot_keys (same count-desc value-asc tie-break)."""
     parts = [
         f"""
-SELECT {_duck_str(key)} AS key_col, key_value, cnt,
+SELECT {duck_str(key)} AS key_col, key_value, cnt,
   CAST({ROUND6.format(x='CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE)')} AS DOUBLE) AS share
 FROM (
   SELECT key_value, cnt,

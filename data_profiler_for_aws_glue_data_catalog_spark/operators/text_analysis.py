@@ -22,6 +22,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_profiler_for_aws_glue_data_catalog_spark.functions import text as X
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
+    ROUND6,
+    round6,
+)
 
 # Fixed ASCII stopword lists (umlauts/accents would be destroyed by the
 # [^a-z0-9] tokenizer, so only ASCII forms are used). Order of LANGS is the
@@ -61,16 +65,16 @@ def text_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
         n_chars.alias("n_chars"),
         n_tokens.alias("n_tokens"),
         F.size(F.array_distinct(F.col("_toks"))).alias("n_distinct_tokens"),
-        X.round6(F.try_divide(total_tok_chars, n_tokens)).alias("avg_token_len"),
+        round6(F.try_divide(total_tok_chars, n_tokens)).alias("avg_token_len"),
         F.size(F.regexp_extract_all(lowered, F.lit(TOKEN_EST_PATTERN), 0)).alias(
             "token_est"
         ),
-        X.round6(
+        round6(
             F.try_divide(
                 F.size(F.regexp_extract_all(lowered, F.lit("[a-z]"), 0)), n_chars
             )
         ).alias("alpha_ratio"),
-        X.round6(
+        round6(
             F.try_divide(
                 F.size(F.regexp_extract_all(lowered, F.lit("[0-9]"), 0)), n_chars
             )
@@ -144,7 +148,7 @@ def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     cols = quality_columns(F.col(text_col), F.col("_toks"))
     return t.select(
         F.col(id_col),
-        *[X.round6(c).alias(name) for name, c in cols.items()],
+        *[round6(c).alias(name) for name, c in cols.items()],
     )
 
 
@@ -204,10 +208,6 @@ def lang_confusion(
 
     tot = _W.partitionBy("label")
     frac = "cast(n AS double) / cast(n_label AS double)"
-    ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-)
     return (
         pairs.withColumn("n_label", F.sum("n").over(tot))
         .selectExpr(

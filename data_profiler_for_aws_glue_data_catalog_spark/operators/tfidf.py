@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_profiler_for_aws_glue_data_catalog_spark.functions import text as X
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import round6
 
 
 def tfidf(
@@ -64,7 +65,7 @@ def tfidf(
             "token",
             "tf",
             "doc_freq",
-            X.round6(
+            round6(
                 F.col("tf").cast("double")
                 * F.log(F.col("_n").cast("double") / F.col("doc_freq"))
             ).alias("tfidf"),

@@ -42,10 +42,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEC = "decimal(27,6)"
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
+    ROUND6,
+    SUM_DECIMAL,
 )
 
 # Late shipment (q4/q21 adaptation without commit/receipt dates): the
@@ -60,7 +59,7 @@ def _dec6(expr_sql: str):
     §5 determinism policy; found by the sf0.1 content fuzz). Identity
     on the fixed 2-dp testdata prices; the oracles apply the same
     pre-round."""
-    return F.expr(f"CAST({ROUND6.format(x=expr_sql)} AS {DEC})")
+    return F.expr(f"CAST({ROUND6.format(x=expr_sql)} AS {SUM_DECIMAL})")
 
 
 def _rev(price: str = "l_extendedprice", disc: str = "l_discount"):
@@ -325,7 +324,7 @@ def q14_promo_revenue(
         F.col("l_partkey") == F.col("p_partkey"),
     )
     promo = F.sum(
-        F.when(F.col("p_type") == promo_type, _rev()).otherwise(F.lit(0).cast(DEC))
+        F.when(F.col("p_type") == promo_type, _rev()).otherwise(F.lit(0).cast(SUM_DECIMAL))
     ).cast("double")
     total = F.sum(_rev()).cast("double")
     return joined.agg(
@@ -380,7 +379,7 @@ def q18_large_orders(
     the groupBy and the orders join share the orderkey partitioning)."""
     qty = (
         lineitem.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast(DEC)).cast("double").alias("sum_qty"))
+        .agg(F.sum(F.col("l_quantity").cast(SUM_DECIMAL)).cast("double").alias("sum_qty"))
         .where(F.col("sum_qty") > min_qty)
     )
     return (
@@ -496,7 +495,7 @@ def q22_global_sales_opportunity(
     pos = customer.where(F.col("c_acctbal") > 0.0)
     thresh = pos.agg(
         F.try_divide(
-            F.sum(F.col("c_acctbal").cast(DEC)).cast("double"),
+            F.sum(F.col("c_acctbal").cast(SUM_DECIMAL)).cast("double"),
             F.count("c_acctbal"),
         ).alias("avg_bal")
     )
@@ -512,7 +511,7 @@ def q22_global_sales_opportunity(
         no_orders.groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.sum(F.col("c_acctbal").cast(DEC)).cast("double").alias("totacctbal"),
+            F.sum(F.col("c_acctbal").cast(SUM_DECIMAL)).cast("double").alias("totacctbal"),
         )
         .orderBy("c_mktsegment")
     )
@@ -522,7 +521,7 @@ def q22_global_sales_opportunity(
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-exact ANSI mirrors, aliased identically to the Spark plans."""
-    rev = f"CAST(SUM(CAST(floor((l_extendedprice * (1.0 - l_discount)) * 1000000.0 + 0.5) / 1000000.0 AS {DEC})) AS DOUBLE)"
+    rev = f"CAST(SUM(CAST(floor((l_extendedprice * (1.0 - l_discount)) * 1000000.0 + 0.5) / 1000000.0 AS {SUM_DECIMAL})) AS DOUBLE)"
     return {
         "q3_shipping_priority": f"""
 SELECT l_orderkey, o_orderdate, o_orderpriority, {rev} AS revenue
@@ -565,7 +564,7 @@ ORDER BY revenue DESC, n_name ASC
 """,
         "q6_forecast_revenue": f"""
 SELECT
-  CAST(SUM(CAST(floor((l_extendedprice * l_discount) * 1000000.0 + 0.5) / 1000000.0 AS {DEC})) AS DOUBLE) AS revenue,
+  CAST(SUM(CAST(floor((l_extendedprice * l_discount) * 1000000.0 + 0.5) / 1000000.0 AS {SUM_DECIMAL})) AS DOUBLE) AS revenue,
   COUNT(*) AS n_lines
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1997-01-01'
@@ -594,12 +593,12 @@ ORDER BY supp_nation, cust_nation, l_year
         "q8_market_share": f"""
 SELECT EXTRACT(year FROM o_orderdate) AS o_year,
   CAST(SUM(CASE WHEN n2.n_name = 'NATION_9'
-        THEN CAST(floor((l_extendedprice * (1.0 - l_discount)) * 1000000.0 + 0.5) / 1000000.0 AS {DEC})
-        ELSE CAST(0 AS {DEC}) END) AS DOUBLE) AS nation_volume,
+        THEN CAST(floor((l_extendedprice * (1.0 - l_discount)) * 1000000.0 + 0.5) / 1000000.0 AS {SUM_DECIMAL})
+        ELSE CAST(0 AS {SUM_DECIMAL}) END) AS DOUBLE) AS nation_volume,
   {rev} AS total_volume,
   CAST(SUM(CASE WHEN n2.n_name = 'NATION_9'
-        THEN CAST(floor((l_extendedprice * (1.0 - l_discount)) * 1000000.0 + 0.5) / 1000000.0 AS {DEC})
-        ELSE CAST(0 AS {DEC}) END) AS DOUBLE) / {rev} AS mkt_share
+        THEN CAST(floor((l_extendedprice * (1.0 - l_discount)) * 1000000.0 + 0.5) / 1000000.0 AS {SUM_DECIMAL})
+        ELSE CAST(0 AS {SUM_DECIMAL}) END) AS DOUBLE) / {rev} AS mkt_share
 FROM lineitem
 JOIN orders ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -639,12 +638,12 @@ ORDER BY custdist DESC, c_count DESC
         "q14_promo_revenue": f"""
 SELECT
   100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
-        THEN CAST(floor((l_extendedprice * (1.0 - l_discount)) * 1000000.0 + 0.5) / 1000000.0 AS {DEC})
-        ELSE CAST(0 AS {DEC}) END) AS DOUBLE)
+        THEN CAST(floor((l_extendedprice * (1.0 - l_discount)) * 1000000.0 + 0.5) / 1000000.0 AS {SUM_DECIMAL})
+        ELSE CAST(0 AS {SUM_DECIMAL}) END) AS DOUBLE)
       / {rev} AS promo_revenue_pct,
   CAST(SUM(CASE WHEN p_type = 'PROMO'
-        THEN CAST(floor((l_extendedprice * (1.0 - l_discount)) * 1000000.0 + 0.5) / 1000000.0 AS {DEC})
-        ELSE CAST(0 AS {DEC}) END) AS DOUBLE) AS promo_revenue,
+        THEN CAST(floor((l_extendedprice * (1.0 - l_discount)) * 1000000.0 + 0.5) / 1000000.0 AS {SUM_DECIMAL})
+        ELSE CAST(0 AS {SUM_DECIMAL}) END) AS DOUBLE) AS promo_revenue,
   {rev} AS total_revenue
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
@@ -669,7 +668,7 @@ ORDER BY s_suppkey
 SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, sum_qty
 FROM orders
 JOIN (
-  SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS {DEC})) AS DOUBLE) AS sum_qty
+  SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS {SUM_DECIMAL})) AS DOUBLE) AS sum_qty
   FROM lineitem GROUP BY l_orderkey
 ) q ON o_orderkey = q.l_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -716,10 +715,10 @@ LIMIT 100
 """,
         "q22_global_sales_opportunity": f"""
 SELECT c_mktsegment, COUNT(*) AS numcust,
-       CAST(SUM(CAST(c_acctbal AS {DEC})) AS DOUBLE) AS totacctbal
+       CAST(SUM(CAST(c_acctbal AS {SUM_DECIMAL})) AS DOUBLE) AS totacctbal
 FROM customer
 WHERE c_acctbal > (
-    SELECT CAST(SUM(CAST(c_acctbal AS {DEC})) AS DOUBLE) / COUNT(c_acctbal)
+    SELECT CAST(SUM(CAST(c_acctbal AS {SUM_DECIMAL})) AS DOUBLE) / COUNT(c_acctbal)
     FROM customer WHERE c_acctbal > 0.0
   )
   AND NOT EXISTS (SELECT 1 FROM orders
@@ -773,7 +772,7 @@ def q8_market_share(
     )
     vol = _rev()
     tgt = F.when(F.col("supp_nation") == target_nation, vol).otherwise(
-        F.lit(0).cast(DEC)
+        F.lit(0).cast(SUM_DECIMAL)
     )
     return (
         joined.groupBy(F.year("o_orderdate").alias("o_year"))

@@ -27,10 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-)
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import ROUND6
 
 TREND_COLS = ["entity", "n_points", "slope_per_day", "intercept"]
 
@@ -186,10 +183,6 @@ def period_over_period(
         ).alias("vsum"),
     )
     w = Window.partitionBy("key").orderBy("_wk")
-    r6 = (  # mirror of the guarded ROUND6 template (specials pass through)
-        "CASE WHEN abs({x}) < 9.0e12 "
-        "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-    )
     return (
         buck.withColumn("prev_vsum", F.lag("vsum").over(w))
         .selectExpr(
@@ -199,7 +192,7 @@ def period_over_period(
             "vsum",
             "prev_vsum",
             f"CASE WHEN prev_vsum IS NOT NULL AND prev_vsum <> 0.0 THEN "
-            f"cast({r6.format(x='100.0 * (vsum - prev_vsum) / prev_vsum')}"
+            f"cast({ROUND6.format(x='100.0 * (vsum - prev_vsum) / prev_vsum')}"
             f" AS double) END AS wow_pct",
         )
     )
@@ -213,10 +206,6 @@ def period_over_period_sql(
     bucket_seconds: int = 7 * 86400,
 ) -> str:
     """DuckDB mirror of :func:`period_over_period`."""
-    r6 = (  # mirror of the guarded ROUND6 template (specials pass through)
-        "CASE WHEN abs({x}) < 9.0e12 "
-        "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
-    )
     return f"""
 WITH base AS (
   SELECT CAST({key_col} AS VARCHAR) AS key,
@@ -242,7 +231,7 @@ lagged AS (
 SELECT key, CAST(to_timestamp(_wk) AS TIMESTAMP) AS week_start,
   n_events, vsum, prev_vsum,
   CASE WHEN prev_vsum IS NOT NULL AND prev_vsum <> 0.0 THEN
-    CAST({r6.format(x='100.0 * (vsum - prev_vsum) / prev_vsum')} AS DOUBLE)
+    CAST({ROUND6.format(x='100.0 * (vsum - prev_vsum) / prev_vsum')} AS DOUBLE)
   END AS wow_pct
 FROM lagged
 """

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import sql_ident, sql_str
+from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import duck_str, sql_ident, sql_str
 
 BOOL_RE = "(?i)^(true|false)$"
 INT_RE = "^-?[0-9]+$"
@@ -74,25 +74,21 @@ def infer_types(df: DataFrame, columns: list[str]) -> DataFrame:
     return row.selectExpr(f"inline(array({', '.join(structs)}))").select(*TYPE_COLS)
 
 
-def _duck_str(v: str) -> str:
-    return "'" + v.replace("'", "''") + "'"
-
-
 def infer_types_sql(table: str, columns: list[str]) -> str:
     """DuckDB mirror (regexp_matches, same anchored patterns)."""
     parts = []
     for c in columns:
         q = f"CAST({c} AS VARCHAR)"
         parts.append(f"""
-SELECT {_duck_str(c)} AS instance,
+SELECT {duck_str(c)} AS instance,
   {_verdict('n_nonnull', 'n_boolean', 'n_integral', 'n_fractional')} AS inferred_type,
   n_rows, n_nonnull, n_boolean, n_integral, n_fractional,
   n_nonnull - n_boolean - n_integral - n_fractional AS n_string
 FROM (
   SELECT count(*) AS n_rows, count({q}) AS n_nonnull,
-    count(CASE WHEN regexp_matches({q}, {_duck_str(BOOL_RE)}) THEN 1 END) AS n_boolean,
-    count(CASE WHEN regexp_matches({q}, {_duck_str(INT_RE)}) THEN 1 END) AS n_integral,
-    count(CASE WHEN regexp_matches({q}, {_duck_str(FRAC_RE)}) THEN 1 END) AS n_fractional
+    count(CASE WHEN regexp_matches({q}, {duck_str(BOOL_RE)}) THEN 1 END) AS n_boolean,
+    count(CASE WHEN regexp_matches({q}, {duck_str(INT_RE)}) THEN 1 END) AS n_integral,
+    count(CASE WHEN regexp_matches({q}, {duck_str(FRAC_RE)}) THEN 1 END) AS n_fractional
   FROM {table}
 )""")
     return "\nUNION ALL\n".join(f"SELECT * FROM ({p})" for p in parts)

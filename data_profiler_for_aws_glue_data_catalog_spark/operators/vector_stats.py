@@ -33,9 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
+    ROUND6,
+    SUM_DECIMAL,
 )
 
 # Sum accumulation: wide decimal. Square accumulation: decimal(18,6) so the
@@ -43,7 +43,6 @@ ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
 # rounding (scan_metrics SQ_DECIMAL policy); the DuckDB twin TRY_CASTs to
 # DECIMAL(18,6) (Spark's try_cast NULL-at-overflow envelope) then widens to
 # 19,6 to force the exact int128 multiply kernel (oracle.sq_operand_sql).
-_DEC = "decimal(27,6)"
 _DDEC = "DECIMAL(27,6)"
 _SQ = "decimal(18,6)"
 _DSQ = "DECIMAL(19,6)"
@@ -96,7 +95,7 @@ def vector_dim_stats(
         # per aggregate expression.
         x = f"try_element_at(_fv, {i + 1})"
         xr = ROUND6.format(x=x)
-        xd = f"try_cast({xr} AS {_DEC})"
+        xd = f"try_cast({xr} AS {SUM_DECIMAL})"
         xq = f"try_cast({xr} AS {_SQ})"
         exprs += [
             f"count({x}) AS n_{i}",
@@ -178,7 +177,7 @@ def vector_norm_stats(
         f"({v} IS NOT NULL AND size({v}) = {dim} AND NOT {bad})"
     )
     nr = ROUND6.format(x=norm)
-    nd = f"try_cast({nr} AS {_DEC})"
+    nd = f"try_cast({nr} AS {SUM_DECIMAL})"
     row = df.selectExpr(
         "count(1) AS n_rows",
         f"sum(CASE WHEN {v} IS NULL THEN 1 ELSE 0 END) AS n_null",
@@ -253,7 +252,7 @@ def _mean_vec_row(df: DataFrame, dim: int, vec_col: str, tag: str):
     exprs = [f"count(_fv) AS n_{tag}"]
     for i in range(dim):
         x = f"try_element_at(_fv, {i + 1})"
-        xd = f"try_cast({ROUND6.format(x=x)} AS {_DEC})"
+        xd = f"try_cast({ROUND6.format(x=x)} AS {SUM_DECIMAL})"
         exprs.append(
             f"cast({ROUND6.format(x=f'try_divide(cast(sum({xd}) AS double), count({x}))')} AS double)"
             f" AS m{tag}_{i}"

@@ -23,11 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEC = "decimal(27,6)"
-ROUND6 = (  # 6-dp deterministic rounding; specials/huge pass through
-    "CASE WHEN abs({x}) < 9.0e12 "
-    "THEN floor(({x}) * 1000000.0 + 0.5) / 1000000.0 ELSE ({x}) END"
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
+    ROUND6,
+    SUM_DECIMAL,
 )
+
 # Per-group domain guard (scan_metrics policy; r8 float-specials axis):
 # a group containing NaN/±Inf or |v| >= 1e12 (the squares' decimal(18,6)
 # domain) takes IEEE double moments instead — specials then propagate
@@ -61,7 +61,7 @@ def zscore_normalize(
     stats = base.groupBy("group_key").agg(
         F.count(F.lit(1)).alias("_n"),
         F.expr("max(abs(value))").alias("_m"),
-        F.expr(f"cast(sum(try_cast(value AS {DEC})) AS double)").alias("_sd"),
+        F.expr(f"cast(sum(try_cast(value AS {SUM_DECIMAL})) AS double)").alias("_sd"),
         # squares accumulate in decimal(18,6) (the scan_metrics SQ_DECIMAL
         # convention: product decimal(37,12) stays inside precision 38)
         F.expr(
@@ -156,7 +156,7 @@ def ab_compare(
     stats = base.groupBy("arm").agg(
         F.count(F.lit(1)).alias("n"),
         F.expr("max(abs(value))").alias("_m"),
-        F.expr(f"cast(sum(try_cast(value AS {DEC})) AS double)").alias("_sd"),
+        F.expr(f"cast(sum(try_cast(value AS {SUM_DECIMAL})) AS double)").alias("_sd"),
         F.expr(
             "cast(sum(try_cast(value AS decimal(18,6))"
             " * try_cast(value AS decimal(18,6))) AS double)"

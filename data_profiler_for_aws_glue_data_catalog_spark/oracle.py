@@ -89,7 +89,7 @@ TABLE_COLUMNS: dict[str, list[tuple[str, str, str]]] = {
     "embeddings": [("vec_id", NUM, "bigint"), ("label", NUM, "int")],
 }
 
-_SUM_DEC = "DECIMAL(27,6)"  # keep in sync with scan_metrics.SUM_DECIMAL
+_SUM_DEC = "DECIMAL(27,6)"  # keep in sync with functions.rounding.SUM_DECIMAL
 # Spark squares decimal(18,6) into decimal(37,12); DuckDB only widens a
 # multiply to w1+w2, and with w=18 it tries the int64 kernel and overflows —
 # width 19 forces the int128 kernel with result width exactly 38. The VALUES

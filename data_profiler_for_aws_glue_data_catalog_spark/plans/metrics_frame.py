@@ -65,6 +65,11 @@ def sql_str(v: str) -> str:
     return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def duck_str(v: str) -> str:
+    """Single-quoted DuckDB string literal (quotes doubled, no escapes)."""
+    return "'" + v.replace("'", "''") + "'"
+
+
 def sql_ident(c: str) -> str:
     """Backtick-quoted Spark-SQL column reference."""
     return "`" + c.replace("`", "``") + "`"

@@ -19,11 +19,8 @@ from __future__ import annotations
 
 import sys
 
-import pytest
-
-# full-surface sweep (~130 s): redundant with the driver oracle gate per run; soak lane + round-end manual run cover it
-pytestmark = pytest.mark.soak
-
+# Default lane on purpose: a plan-only full-surface sweep, the one test
+# that builds every registered query and still fits the default lane.
 
 sys.path.insert(0, "/root/repo")
 
