@@ -378,9 +378,6 @@ def _stream_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic, so it holds a full SQL oracle."""
     from data_profiler_for_aws_glue_data_catalog_spark.streaming.enrichment import enrich_stream
 
-    import tempfile
-    import uuid
-
     dim = spark.createDataFrame(
         [(0, "gold"), (1, "silver"), (2, "bronze")], "tier_key int, tier string"
     )
@@ -397,20 +394,24 @@ def _stream_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("value_sum"),
         )
     )
-    name = f"sq_{uuid.uuid4().hex}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sg_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _run_to_table(agg, spark, "complete")
 
 
-def _run_to_table(out: DataFrame, spark: SparkSession) -> DataFrame:
+def _await_stream(q, timeout_s: float = 300) -> None:
+    """Wait for an availableNow query to drain its input. One that outlives
+    the wait is stopped — a silently-still-active stream would keep
+    submitting micro-batch stages underneath every later query in the
+    session — and the run fails: its sink holds a partial result."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name} did not finish within {timeout_s} s; stopped"
+        )
+
+
+def _run_to_table(
+    out: DataFrame, spark: SparkSession, output_mode: str = "append"
+) -> DataFrame:
     """Execute a streaming frame with availableNow into a memory sink and
     return the collected batch relation."""
     import tempfile
@@ -418,20 +419,14 @@ def _run_to_table(out: DataFrame, spark: SparkSession) -> DataFrame:
 
     name = f"sq_{uuid.uuid4().hex}"
     q = (
-        out.writeStream.outputMode("append")
+        out.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(name)
         .option("checkpointLocation", tempfile.mkdtemp(prefix="sg_ckpt_"))
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    # r10 leak guard: if the availableNow run somehow outlives the wait,
-    # stop it — a silently-still-active stream would keep submitting
-    # micro-batch stages underneath every later query in the session
-    if q.isActive:
-        q.stop()
-        q.awaitTermination(30)
+    _await_stream(q)
     return spark.table(name)
 
 

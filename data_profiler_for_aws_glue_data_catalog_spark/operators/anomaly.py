@@ -37,9 +37,11 @@ from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
     ROUND6,
     SUM_DECIMAL,
 )
-
-_SQ_DEC = "decimal(18,6)"
-_SQ_GUARD = "1e12"  # |value| beyond this: IEEE fallback (scan_metrics policy)
+from data_profiler_for_aws_glue_data_catalog_spark.operators.scan_metrics import (
+    SQ_DECIMAL,
+    SQ_GUARD_SQL,
+    in_domain_sql,
+)
 
 ANOMALY_COLS = [
     "instance",
@@ -82,16 +84,12 @@ def detect_anomalies(
     ).withColumn("_max_ts", F.max("_ts").over(Window.partitionBy(*keys)))
 
     base = "_ts < _max_ts"
-    _ma = f"max(abs(_v)) FILTER (WHERE {base})"
-    in_dom = (
-        f"coalesce({_ma} < {_SQ_GUARD} AND ({_ma} >= 1e-3 OR {_ma} = 0), "
-        f"false)"
-    )
+    in_dom = in_domain_sql(f"max(abs(_v)) FILTER (WHERE {base})", SQ_GUARD_SQL)
     s_dec = (
         f"cast(sum(cast(_v AS {SUM_DECIMAL})) FILTER (WHERE {base}) AS double)"
     )
     s2_dec = (
-        f"cast(sum(cast(_v AS {_SQ_DEC}) * cast(_v AS {_SQ_DEC})) "
+        f"cast(sum(cast(_v AS {SQ_DECIMAL}) * cast(_v AS {SQ_DECIMAL})) "
         f"FILTER (WHERE {base}) AS double)"
     )
     row = src.groupBy(keys).agg(

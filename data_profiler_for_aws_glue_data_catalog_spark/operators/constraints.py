@@ -28,9 +28,10 @@ Execution shape (100 TB notes)
 
 Determinism: metric values are emitted through the engine's fixed
 floor-based 6-dp rounding (functions.rounding.ROUND6) and the
-sum/mean constraints reuse the exact-decimal accumulation expressions
-from operators.scan_metrics, so verification output hash-matches the
-DuckDB oracle (oracle_ext.verification_sql mirrors term-by-term).
+sum/mean constraints are the profiler's own guarded exact-decimal
+Sum/Mean (operators.scan_metrics), mirrored in DuckDB by the profile
+oracle's (oracle._sum_dec / oracle._mean_sql), so verification output
+hash-matches the DuckDB oracle (verification_sql).
 
 Each Constraint carries BOTH the Spark SQL and the DuckDB SQL text of
 its metric aggregate; constructors keep the two in lockstep so a suite
@@ -44,65 +45,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
-    ROUND6,
-    SUM_DECIMAL,
+from data_profiler_for_aws_glue_data_catalog_spark import oracle as O
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import ROUND6
+from data_profiler_for_aws_glue_data_catalog_spark.operators.scan_metrics import (
+    aggregate_moments,
+    mean_sql,
+    sum_sql,
 )
-
-# Exact-decimal deterministic aggregates — keep in sync with
-# functions/rounding.py + operators/scan_metrics.py (Spark side) and
-# oracle.py (DuckDB side).
-_SUM_DEC_DUCK = "DECIMAL(27,6)"
-_SUM_GUARD = "1e21"
-_SUM_FLOOR = "1e-3"  # below: 6-dp rounding dominates -> IEEE branch
-
-
-def _in_domain(c: str) -> str:
-    # Dialect-neutral (both engines are case-insensitive for keywords):
-    # two-sided decimal domain, matching scan_metrics._in_domain_sql.
-    m = f"max(abs({c}))"
-    return (
-        f"coalesce({m} < {_SUM_GUARD} AND ({m} >= {_SUM_FLOOR} OR {m} = 0), "
-        f"false)"
-    )
-
-
-def _det_sum_spark(c: str) -> str:
-    dec = f"cast(sum(try_cast({c} AS {SUM_DECIMAL})) AS double)"
-    return (
-        f"CASE WHEN {_in_domain(c)} THEN {dec} "
-        f"ELSE sum(cast({c} AS double)) END"
-    )
-
-
-def _det_sum_duck(c: str) -> str:
-    dec = f"CAST(SUM(CAST({c} AS {_SUM_DEC_DUCK})) AS DOUBLE)"
-    return (
-        f"CASE WHEN {_in_domain(c)} THEN {dec} "
-        f"ELSE SUM(CAST({c} AS DOUBLE)) END"
-    )
-
-
-def _det_mean_spark(c: str) -> str:
-    dec = (
-        f"try_divide(cast(sum(try_cast({c} AS {SUM_DECIMAL})) AS double), "
-        f"count({c}))"
-    )
-    return (
-        f"CASE WHEN {_in_domain(c)} THEN {dec} "
-        f"ELSE avg(cast({c} AS double)) END"
-    )
-
-
-def _det_mean_duck(c: str) -> str:
-    dec = (
-        f"CAST(SUM(CAST({c} AS {_SUM_DEC_DUCK})) AS DOUBLE) "
-        f"/ NULLIF(COUNT({c}), 0)"
-    )
-    return (
-        f"CASE WHEN {_in_domain(c)} THEN {dec} "
-        f"ELSE AVG(CAST({c} AS DOUBLE)) END"
-    )
 
 
 @dataclass(frozen=True)
@@ -193,13 +142,14 @@ def has_max(c: str, op: str, x: float) -> Constraint:
 
 def has_sum(c: str, op: str, x: float) -> Constraint:
     return Constraint(
-        f"has_sum({c})", c, _det_sum_spark(c), _det_sum_duck(c), op, x
+        f"has_sum({c})", c, sum_sql(aggregate_moments(c)), O._sum_dec(c), op, x
     )
 
 
 def has_mean(c: str, op: str, x: float) -> Constraint:
     return Constraint(
-        f"has_mean({c})", c, _det_mean_spark(c), _det_mean_duck(c), op, x
+        f"has_mean({c})", c, mean_sql(aggregate_moments(c)), O._mean_sql(c),
+        op, x,
     )
 
 

@@ -45,7 +45,7 @@ Scale notes (100 TB)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_profiler_for_aws_glue_data_catalog_spark.config import ProfilerConfig
@@ -66,28 +66,42 @@ def frequency_table(df: DataFrame, column: str) -> DataFrame:
     )
 
 
+def frequency_scalar_aggs() -> list[Column]:
+    """d, n, u, clnc over a (value, cnt) frequency relation: distinct
+    non-null values, non-null rows, singleton values and sum(cnt ln cnt)."""
+    nn = F.col("value").isNotNull()
+    cnt = F.col("cnt")
+    return [
+        F.count(F.when(nn, True)).alias("d"),
+        F.sum(F.when(nn, cnt)).alias("n"),
+        F.count(F.when(nn & (cnt == 1), True)).alias("u"),
+        F.sum(F.when(nn, cnt * F.log(cnt.cast("double")))).alias("clnc"),
+    ]
+
+
+def frequency_scalars() -> list[tuple[str, Column]]:
+    """(metric name, value) of CountDistinct/Entropy/UniqueValueRatio/
+    Uniqueness over the columns of :func:`frequency_scalar_aggs`."""
+    d, n, u, clnc = (F.col(x).cast("double") for x in ("d", "n", "u", "clnc"))
+    return [
+        ("CountDistinct", d),
+        ("Entropy", F.when(n > 0, F.log(n) - F.try_divide(clnc, n))),
+        ("UniqueValueRatio", F.try_divide(u, d)),
+        ("Uniqueness", F.try_divide(u, n)),
+    ]
+
+
 def frequency_scalar_metrics(
     freq: DataFrame, column: str, col_type: str
 ) -> DataFrame:
     """CountDistinct/Entropy/UniqueValueRatio/Uniqueness from a frequency
     table, in one tiny aggregate."""
-    nn = F.col("value").isNotNull()
-    cnt = F.col("cnt")
-    row = freq.agg(
-        F.count(F.when(nn, True)).alias("d"),  # distinct non-null values
-        F.sum(F.when(nn, cnt)).alias("n"),  # non-null rows
-        F.count(F.when(nn & (cnt == 1), True)).alias("u"),  # singleton values
-        F.sum(F.when(nn, cnt * F.log(cnt.cast("double")))).alias("clnc"),
-    )
-    d, n, u, clnc = (F.col(x).cast("double") for x in ("d", "n", "u", "clnc"))
-    entropy = F.when(n > 0, F.log(n) - F.try_divide(clnc, n))
+    row = freq.agg(*frequency_scalar_aggs())
     structs = F.array(
-        metric_struct("Column", column, "CountDistinct", d, col_type),
-        metric_struct("Column", column, "Entropy", entropy, col_type),
-        metric_struct(
-            "Column", column, "UniqueValueRatio", F.try_divide(u, d), col_type
-        ),
-        metric_struct("Column", column, "Uniqueness", F.try_divide(u, n), col_type),
+        *[
+            metric_struct("Column", column, name, value, col_type)
+            for name, value in frequency_scalars()
+        ]
     )
     return row.select(F.explode(structs).alias("kv")).select("kv.*")
 

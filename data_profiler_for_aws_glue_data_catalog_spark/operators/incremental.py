@@ -11,10 +11,12 @@ cost O(new data), not O(all data).
 Two state relations, both plain DataFrames (persistable as Parquet):
 
 * **Scan states** — one row per column per increment (+ a dataset row):
-  counts, exact-decimal sums/sums-of-squares, min/max, length min/max,
-  max |value| (the decimal-domain guard), and a Datasketches HLL sketch
+  counts, exact-decimal sums/sums-of-squares, the IEEE sum, mean and
+  second central moment (var_pop x n), min/max, length min/max, max
+  |value| (the decimal-domain guard), and a Datasketches HLL sketch
   (``hll_sketch_agg``) for mergeable approx-distinct. All fields merge
-  by sum / min / max / ``hll_union_agg`` — one ``groupBy(instance)``.
+  by sum / min / max / ``hll_union_agg`` (the moments by Chan's formula)
+  — one ``groupBy(instance)``.
 * **Frequency states** — (instance, value-as-string, cnt): Deequ's
   ``FrequenciesAndNumRows`` state. Merges by summed counts; yields EXACT
   CountDistinct / Distinctness / Entropy / Uniqueness / UniqueValueRatio
@@ -25,17 +27,22 @@ Two state relations, both plain DataFrames (persistable as Parquet):
   the bounded-size alternative when approximate distinct suffices.
 
 Metric parity: ``incremental_profile`` over any disjoint partition of a
-table emits byte-identical metric rows to ``profile_table(df,
-include_approx=False)`` — same guarded decimal finishing expressions
-(scan_metrics.py policy), same frequency finishing identities
+table emits the metric rows of ``profile_table(df,
+include_approx=False)`` — the same finisher (scan_metrics.finish) over
+the state columns, the same frequency finishing identities
 (frequency_metrics.py), so the DuckDB profile oracle checks the merged
-path too. The HLL-based ApproxCountDistinct is a different sketch
-family from the single-pass HLL++ (``approx_count_distinct``) and is
-emitted only by ``approx_distinct_from_states`` (tolerance-tested, not
-hash-checked). Merged-sketch estimates track a single-pass sketch to
-within the sketch's own error (internal sparse->dense mode transitions
-can differ between the two paths, so equality is approximate, not
-exact — the tolerance tests bound both against the exact count).
+path too. Rows are byte-identical wherever the decimal branch applies
+(every column inside the decimal domain); out-of-domain columns take the
+IEEE branch, whose partial sums and moments merge in another order than
+one pass and agree to rounding (Sum/Mean) or to the stability of Spark's
+own per-increment var_pop (StandardDeviation), not bit for bit. The
+HLL-based ApproxCountDistinct is a different sketch family from the
+single-pass HLL++ (``approx_count_distinct``) and is emitted only by
+``approx_distinct_from_states`` (tolerance-tested, not hash-checked).
+Merged-sketch estimates track a single-pass sketch to within the
+sketch's own error (internal sparse->dense mode transitions can differ
+between the two paths, so equality is approximate, not exact — the
+tolerance tests bound both against the exact count).
 
 Plan shape per increment: scan states are ONE fused agg pass (map-side
 partials, single-row exchange); frequency states are ONE shuffle for
@@ -52,11 +59,14 @@ from pyspark.sql.window import Window
 from data_profiler_for_aws_glue_data_catalog_spark.config import ProfilerConfig
 from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import SUM_DECIMAL
 from data_profiler_for_aws_glue_data_catalog_spark.operators import types as T
+from data_profiler_for_aws_glue_data_catalog_spark.operators.frequency_metrics import (
+    frequency_scalar_aggs,
+    frequency_scalars,
+)
 from data_profiler_for_aws_glue_data_catalog_spark.operators.scan_metrics import (
-    SQ_DECIMAL,
-    _SQ_GUARD_SQL,
-    _SUM_FLOOR_SQL,
-    _SUM_GUARD_SQL,
+    Moments,
+    aggregate_moments,
+    finish,
 )
 from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import (
     METRIC_COLS,
@@ -66,11 +76,23 @@ from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import (
 
 DATASET_INSTANCE = "*"
 
-SCAN_STATE_COLS = [
-    "instance", "col_type", "kind", "n_rows", "n_nonnull",
-    "sum_dec", "sumsq_dec", "sum_dbl", "sumsq_dbl",
-    "min_val", "max_val", "min_len", "max_len", "max_abs", "hll",
-]
+# State column -> type; the columns a row's kind has no moment for are NULL.
+_STATE_TYPES = {
+    "n_nonnull": "bigint",
+    "sum_dec": SUM_DECIMAL,
+    "sumsq_dec": "decimal(38,12)",
+    "sum_dbl": "double",
+    "mean_dbl": "double",
+    "m2_dbl": "double",
+    "min_val": "double",
+    "max_val": "double",
+    "min_len": "bigint",
+    "max_len": "bigint",
+    "max_abs": "double",
+    "hll": "binary",
+}
+
+SCAN_STATE_COLS = ["instance", "col_type", "kind", "n_rows", *_STATE_TYPES]
 
 _HLL_LGK = 12
 
@@ -103,57 +125,40 @@ def scan_states(
     df = T.cast_convertibles(df, config)
     profiled = _profiled(df, config)
 
-    null = "CAST(NULL AS {t})"
-    structs = [
-        "named_struct("
-        f"'instance', {sql_str(DATASET_INSTANCE)}, "
-        "'col_type', CAST(NULL AS string), 'kind', 'dataset', "
-        "'n_rows', count(1), 'n_nonnull', CAST(NULL AS bigint), "
-        f"'sum_dec', {null.format(t=SUM_DECIMAL)}, "
-        "'sumsq_dec', CAST(NULL AS decimal(38,12)), "
-        "'sum_dbl', CAST(NULL AS double), 'sumsq_dbl', CAST(NULL AS double), "
-        "'min_val', CAST(NULL AS double), 'max_val', CAST(NULL AS double), "
-        "'min_len', CAST(NULL AS bigint), 'max_len', CAST(NULL AS bigint), "
-        "'max_abs', CAST(NULL AS double), 'hll', CAST(NULL AS binary))"
-    ]
+    def struct(instance: str, typ: str | None, kind: str, fields: dict) -> str:
+        cols = [
+            f"'instance', {sql_str(instance)}",
+            f"'col_type', CAST({'NULL' if typ is None else sql_str(typ)} AS string)",
+            f"'kind', {sql_str(kind)}",
+            "'n_rows', count(1)",
+        ] + [
+            f"'{k}', CAST({fields.get(k, 'NULL')} AS {t})"
+            for k, t in _STATE_TYPES.items()
+        ]
+        return f"named_struct({', '.join(cols)})"
+
+    structs = [struct(DATASET_INSTANCE, None, "dataset", {})]
     for c, kind, typ in profiled:
         q = sql_ident(c)
-        num = kind == T.NUMERIC
-        xd = f"try_cast({q} AS {SQ_DECIMAL})"
+        agg = aggregate_moments(q)
+        fields = {"n_nonnull": agg.nonnull}
+        if include_hll:
+            fields["hll"] = f"hll_sketch_agg(cast({q} AS string), {_HLL_LGK})"
+        if kind == T.NUMERIC:
+            fields.update(
+                sum_dec=agg.sum_dec,
+                sumsq_dec=agg.sumsq_dec,
+                sum_dbl=agg.sum_dbl,
+                mean_dbl=agg.mean_dbl,
+                m2_dbl=f"var_pop(cast({q} AS double)) * {agg.nonnull}",
+                min_val=agg.min,
+                max_val=agg.max,
+                max_abs=agg.max_abs,
+            )
+        else:
+            fields.update(min_len=agg.min_len, max_len=agg.max_len)
         structs.append(
-            "named_struct("
-            f"'instance', {sql_str(c)}, "
-            f"'col_type', {sql_str(typ)}, "
-            f"'kind', {sql_str('num' if num else 'text')}, "
-            "'n_rows', count(1), "
-            f"'n_nonnull', count({q}), "
-            + (
-                f"'sum_dec', cast(sum(try_cast({q} AS {SUM_DECIMAL})) AS {SUM_DECIMAL}), "
-                f"'sumsq_dec', cast(sum({xd} * {xd}) AS decimal(38,12)), "
-                f"'sum_dbl', sum(cast({q} AS double)), "
-                f"'sumsq_dbl', sum(cast({q} AS double) * cast({q} AS double)), "
-                f"'min_val', cast(min({q}) AS double), "
-                f"'max_val', cast(max({q}) AS double), "
-                "'min_len', CAST(NULL AS bigint), 'max_len', CAST(NULL AS bigint), "
-                f"'max_abs', cast(max(abs({q})) AS double), "
-                if num
-                else (
-                    f"'sum_dec', {null.format(t=SUM_DECIMAL)}, "
-                    "'sumsq_dec', CAST(NULL AS decimal(38,12)), "
-                    "'sum_dbl', CAST(NULL AS double), "
-                    "'sumsq_dbl', CAST(NULL AS double), "
-                    "'min_val', CAST(NULL AS double), "
-                    "'max_val', CAST(NULL AS double), "
-                    f"'min_len', cast(min(length({q})) AS bigint), "
-                    f"'max_len', cast(max(length({q})) AS bigint), "
-                    "'max_abs', CAST(NULL AS double), "
-                )
-            )
-            + (
-                f"'hll', hll_sketch_agg(cast({q} AS string), {_HLL_LGK}))"
-                if include_hll
-                else "'hll', CAST(NULL AS binary))"
-            )
+            struct(c, typ, "num" if kind == T.NUMERIC else "text", fields)
         )
     row = df.selectExpr(*[f"({s}) AS s{i}" for i, s in enumerate(structs)])
     return row.selectExpr(
@@ -162,74 +167,82 @@ def scan_states(
 
 
 def merge_scan_states(states: DataFrame) -> DataFrame:
-    """Merge any number of increments' scan states: one tiny groupBy."""
-    return states.groupBy("instance").agg(
-        F.first("col_type", ignorenulls=False).alias("col_type"),
-        F.first("kind").alias("kind"),
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_nonnull").alias("n_nonnull"),
-        F.sum("sum_dec").cast(SUM_DECIMAL).alias("sum_dec"),
-        F.sum("sumsq_dec").cast("decimal(38,12)").alias("sumsq_dec"),
-        F.sum("sum_dbl").alias("sum_dbl"),
-        F.sum("sumsq_dbl").alias("sumsq_dbl"),
-        F.min("min_val").alias("min_val"),
-        F.max("max_val").alias("max_val"),
-        F.min("min_len").alias("min_len"),
-        F.max("max_len").alias("max_len"),
-        F.max("max_abs").alias("max_abs"),
-        F.expr("hll_union_agg(hll, true)").alias("hll"),
-    ).select(*SCAN_STATE_COLS)
+    """Merge any number of increments' scan states: one tiny groupBy.
+
+    The IEEE second moment merges by Chan's formula, M2 = sum(m2_i +
+    n_i (mean_i - mean)^2) around the pooled mean (a window over the
+    instance's state rows, planned on the groupBy's own exchange) — the
+    naive sum(x^2) - sum(x)^2/n cancels to 0 at high magnitude.
+    """
+    n, mean = F.col("n_nonnull"), F.col("mean_dbl")
+    w = Window.partitionBy("instance")
+    pooled = F.try_divide(F.sum(n * mean).over(w), F.sum(n).over(w))
+    return (
+        states.withColumn("_mean", pooled)
+        .groupBy("instance")
+        .agg(
+            F.first("col_type", ignorenulls=False).alias("col_type"),
+            F.first("kind").alias("kind"),
+            F.sum("n_rows").alias("n_rows"),
+            F.sum("n_nonnull").alias("n_nonnull"),
+            F.sum("sum_dec").cast(SUM_DECIMAL).alias("sum_dec"),
+            F.sum("sumsq_dec").cast("decimal(38,12)").alias("sumsq_dec"),
+            F.sum("sum_dbl").alias("sum_dbl"),
+            F.max("_mean").alias("mean_dbl"),
+            F.sum(F.col("m2_dbl") + n * (mean - F.col("_mean")) ** 2).alias("m2_dbl"),
+            F.min("min_val").alias("min_val"),
+            F.max("max_val").alias("max_val"),
+            F.min("min_len").alias("min_len"),
+            F.max("max_len").alias("max_len"),
+            F.max("max_abs").alias("max_abs"),
+            F.expr("hll_union_agg(hll, true)").alias("hll"),
+        )
+        .select(*SCAN_STATE_COLS)
+    )
+
+
+# Where a merged scan state keeps each raw moment of its column.
+_STATE_MOMENTS = Moments(
+    rows="n_rows",
+    nonnull="n_nonnull",
+    min="min_val",
+    max="max_val",
+    min_len="min_len",
+    max_len="max_len",
+    max_abs="max_abs",
+    sum_dec="sum_dec",
+    sumsq_dec="sumsq_dec",
+    sum_dbl="sum_dbl",
+    mean_dbl="try_divide(sum_dbl, n_nonnull)",
+    sd_dbl="sqrt(try_divide(m2_dbl, n_nonnull))",
+)
 
 
 def scan_metrics_from_states(merged: DataFrame) -> DataFrame:
     """Finish merged scan states into the long metrics relation.
 
-    Expression shapes mirror scan_metrics exactly (guarded decimal sums,
-    fixed stddev finishing), so values are identical to a single-pass
-    profile — and to its DuckDB oracle. Excludes sketch metrics (see
-    approx_distinct_from_states) and frequency metrics.
+    The finishing expressions are scan_metrics.finish over the state
+    columns, so the decimal branch is bit-identical to a single-pass
+    profile — and to its DuckDB oracle. The IEEE branch (out-of-domain
+    columns) merges partial sums and moments in a different order than
+    one pass does and agrees to rounding only. Excludes sketch metrics
+    (see approx_distinct_from_states) and frequency metrics.
     """
-    floor = f"(max_abs >= {_SUM_FLOOR_SQL} OR max_abs = 0)"
-    sum_guard = f"coalesce(max_abs < {_SUM_GUARD_SQL} AND {floor}, false)"
-    sq_guard = f"coalesce(max_abs < {_SQ_GUARD_SQL} AND {floor}, false)"
-    n = "cast(n_nonnull AS double)"
-    sx = "cast(sum_dec AS double)"
-    sx2 = "cast(sumsq_dec AS double)"
-    var = f"try_divide({sx2} - try_divide({sx} * {sx}, {n}), {n})"
-    var_dbl = (
-        f"try_divide(sumsq_dbl - try_divide(sum_dbl * sum_dbl, {n}), {n})"
-    )
+
+    def structs(kind: str) -> str:
+        return "array(" + ", ".join(
+            f"named_struct('entity', 'Column', 'instance', instance, "
+            f"'name', {sql_str(name)}, 'value', CAST(({expr}) AS double), "
+            f"'type', col_type)"
+            for name, expr in finish(kind, _STATE_MOMENTS)
+        ) + ")"
+
     m = (
-        "CASE"
-        " WHEN instance = '*' THEN array(named_struct("
-        "   'entity', 'Dataset', 'instance', '*', 'name', 'Size',"
-        "   'value', cast(n_rows AS double), 'type', CAST(NULL AS string)))"
-        " WHEN kind = 'num' THEN array("
-        "  named_struct('entity', 'Column', 'instance', instance, 'name', 'Completeness',"
-        "   'value', cast(try_divide(n_nonnull, n_rows) AS double), 'type', col_type),"
-        "  named_struct('entity', 'Column', 'instance', instance, 'name', 'Maximum',"
-        "   'value', max_val, 'type', col_type),"
-        "  named_struct('entity', 'Column', 'instance', instance, 'name', 'Minimum',"
-        "   'value', min_val, 'type', col_type),"
-        f"  named_struct('entity', 'Column', 'instance', instance, 'name', 'Sum',"
-        f"   'value', cast(CASE WHEN {sum_guard} THEN {sx} ELSE sum_dbl END AS double),"
-        "   'type', col_type),"
-        f"  named_struct('entity', 'Column', 'instance', instance, 'name', 'Mean',"
-        f"   'value', cast(CASE WHEN {sum_guard} THEN try_divide({sx}, n_nonnull)"
-        f"     ELSE try_divide(sum_dbl, n_nonnull) END AS double), 'type', col_type),"
-        f"  named_struct('entity', 'Column', 'instance', instance, 'name', 'StandardDeviation',"
-        f"   'value', cast(CASE WHEN {sq_guard} THEN "
-        f"     (CASE WHEN {n} > 0 THEN sqrt(greatest({var}, 0.0D)) END)"
-        f"     ELSE (CASE WHEN {n} > 0 THEN sqrt(greatest({var_dbl}, 0.0D)) END)"
-        "    END AS double), 'type', col_type))"
-        " ELSE array("
-        "  named_struct('entity', 'Column', 'instance', instance, 'name', 'Completeness',"
-        "   'value', cast(try_divide(n_nonnull, n_rows) AS double), 'type', col_type),"
-        "  named_struct('entity', 'Column', 'instance', instance, 'name', 'MaxLength',"
-        "   'value', cast(max_len AS double), 'type', col_type),"
-        "  named_struct('entity', 'Column', 'instance', instance, 'name', 'MinLength',"
-        "   'value', cast(min_len AS double), 'type', col_type))"
-        " END"
+        f"CASE WHEN instance = {sql_str(DATASET_INSTANCE)} THEN array(named_struct("
+        "'entity', 'Dataset', 'instance', instance, 'name', 'Size', "
+        "'value', cast(n_rows AS double), 'type', CAST(NULL AS string))) "
+        f"WHEN kind = 'num' THEN {structs(T.NUMERIC)} "
+        f"ELSE {structs(T.TEXT)} END"
     )
     return merged.selectExpr(f"inline({m})").select(*METRIC_COLS)
 
@@ -303,23 +316,14 @@ def frequency_metrics_from_states(
     meta = merged_scan.where(F.col("instance") != DATASET_INSTANCE).select(
         "instance", "col_type", "kind"
     )
-    nn = F.col("value").isNotNull()
-    cnt = F.col("cnt")
     scal = (
         merged_freq.groupBy("instance")
-        .agg(
-            F.count(F.when(nn, True)).alias("d"),
-            F.sum(F.when(nn, cnt)).alias("n"),
-            F.count(F.when(nn & (cnt == 1), True)).alias("u"),
-            F.sum(F.when(nn, cnt * F.log(cnt.cast("double")))).alias("clnc"),
-            F.sum("cnt").alias("total"),
-        )
+        .agg(*frequency_scalar_aggs())
         .join(F.broadcast(meta), "instance")
     )
-    d, n, u, clnc = (
-        F.col(x).cast("double") for x in ("d", "n", "u", "clnc")
+    distinctness = F.try_divide(
+        F.col("d").cast("double"), F.col("n").cast("double")
     )
-    entropy = F.when(n > 0, F.log(n) - F.try_divide(clnc, n))
     is_text = F.col("kind") == "text"
     exp = bool(config.compute_expensive)
 
@@ -338,13 +342,10 @@ def frequency_metrics_from_states(
             F.when(
                 is_text & F.lit(exp),
                 F.array(
-                    ms("Distinctness", F.try_divide(d, n)),
-                    ms("CountDistinct", d),
-                    ms("Entropy", entropy),
-                    ms("UniqueValueRatio", F.try_divide(u, d)),
-                    ms("Uniqueness", F.try_divide(u, n)),
+                    ms("Distinctness", distinctness),
+                    *[ms(name, v) for name, v in frequency_scalars()],
                 ),
-            ).otherwise(F.array(ms("Distinctness", F.try_divide(d, n))))
+            ).otherwise(F.array(ms("Distinctness", distinctness)))
         ).alias("kv")
     ).select("kv.*")
     if not exp:
@@ -435,10 +436,10 @@ def incremental_profile(
     # and the scan-state meta broadcast), and Spark re-runs the merge
     # aggregation per branch otherwise — measured 4 consumer stages x
     # ~5.5 s CPU each re-aggregating the same ~11 MB shuffle at sf0.1.
-    # The merged state is the small relation by construction (one row per
-    # column / per distinct value — the same thing a real pipeline would
-    # PERSIST as its state table), so the checkpoint is state-sized, not
-    # data-sized, at any scale.
+    # The merged scan state is one row per column. The merged frequency
+    # state is one row per distinct (column, value) — O(distinct values),
+    # the same thing a real pipeline would PERSIST as its state table: as
+    # large as the data for a near-unique column.
     from data_profiler_for_aws_glue_data_catalog_spark.plans.partitioning import (
         materialize,
     )

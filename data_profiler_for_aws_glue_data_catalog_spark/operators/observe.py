@@ -28,38 +28,36 @@ observing the fused pass's CASE-guarded Sum/Mean/StdDev expressions
 verbatim evaluates the expensive decimal sum 3x and the guard max 3x
 (measured ~16 s extra on a 600k x 16 lineitem scan that costs 0.6 s).
 Instead each RAW MOMENT is observed exactly once per column — count,
-max(abs) domain guard, decimal sum, decimal square-sum, IEEE fallbacks —
-and the metric arithmetic (guard branch, mean division, variance finish)
-runs in the Python finisher: a handful of IEEE double ops, bit-identical
-to the JVM's finishing expressions (same operations, same order), matching
-the same DuckDB oracle as the fused pass.
+max(abs) domain guard, decimal sum, decimal square-sum, IEEE fallbacks.
+``ScanObservation.metrics`` puts the observed row into a one-row local
+DataFrame and finishes it with scan_metrics.finish: the guard, the
+branch choice and the variance arithmetic are the fused pass's own JVM
+expressions over the observed moments, so the metrics match the fused
+pass and its DuckDB oracle.
 """
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass, field
-from typing import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from data_profiler_for_aws_glue_data_catalog_spark.config import ProfilerConfig
-from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import SUM_DECIMAL
 from data_profiler_for_aws_glue_data_catalog_spark.operators import types as T
 from data_profiler_for_aws_glue_data_catalog_spark.operators.scan_metrics import (
-    SQ_DECIMAL,
-    SQ_GUARD,
-    SUM_GUARD,
+    Moments,
+    aggregate_moments,
+    finish,
     quantile_name,
     quantile_points,
 )
 from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import (
-    METRICS_SCHEMA,
+    METRIC_COLS,
+    metric_struct_sql,
     sql_ident,
 )
-
-Row = tuple  # (entity, instance, name, value, type)
 
 
 @dataclass
@@ -73,23 +71,17 @@ class ScanObservation:
     """
 
     observation: Observation
-    _finishers: list[Callable[[dict], list[Row]]] = field(default_factory=list)
+    schema: StructType  # of the observed row: one field per moment alias
+    structs: list[str]  # metric structs over those aliases
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         got = self.observation.get
-        rows = [r for fin in self._finishers for r in fin(got)]
-        return spark.createDataFrame(rows, METRICS_SCHEMA)
-
-
-def _f(v) -> float | None:
-    return None if v is None else float(v)
-
-
-def _div(a: float | None, b: float | None) -> float | None:
-    """try_divide semantics: NULL on NULL or zero denominator."""
-    if a is None or not b:
-        return None
-    return a / b
+        row = spark.createDataFrame(
+            [tuple(got[f.name] for f in self.schema.fields)], self.schema
+        )
+        return row.selectExpr(f"inline(array({', '.join(self.structs)}))").select(
+            *METRIC_COLS
+        )
 
 
 def attach_scan_observation(
@@ -113,7 +105,7 @@ def attach_scan_observation(
     profiled = [(c, k, t) for c, k, t in profiled if k is not None]
 
     exprs: list[str] = []
-    finishers: list[Callable[[dict], list[Row]]] = []
+    structs: list[str] = []
     n = 0
 
     def add(expr: str) -> str:
@@ -124,86 +116,32 @@ def attach_scan_observation(
         return a
 
     a_size = add("count(1)")
-    finishers.append(
-        lambda got: [("Dataset", "*", "Size", _f(got[a_size]), None)]
-    )
+    structs.append(metric_struct_sql("Dataset", "*", "Size", a_size, None))
 
     for c, kind, typ in profiled:
         q = sql_ident(c)
-        a_cnt = add(f"count({q})")
-
-        def fin_completeness(got, a_cnt=a_cnt, c=c, typ=typ):
-            return [
-                (
-                    "Column",
-                    c,
-                    "Completeness",
-                    _div(_f(got[a_cnt]), got[a_size]),
-                    typ,
-                )
-            ]
-
-        finishers.append(fin_completeness)
+        agg = aggregate_moments(q)
+        a_cnt = add(agg.nonnull)
+        extra: list[tuple[str, str]] = []
         if include_approx:
             a_acd = add(
                 f"approx_count_distinct({q}, {config.approx_distinct_rsd!r})"
             )
-            finishers.append(
-                lambda got, a=a_acd, c=c, typ=typ: [
-                    ("Column", c, "ApproxCountDistinct", _f(got[a]), typ)
-                ]
-            )
+            extra.append(("ApproxCountDistinct", a_acd))
         if kind == T.NUMERIC:
             # raw moments, each observed exactly once (see module docstring)
-            a_max = add(f"max({q})")
-            a_min = add(f"min({q})")
-            a_guard = add(f"max(abs({q}))")
-            a_dec = add(f"cast(sum(try_cast({q} AS {SUM_DECIMAL})) AS double)")
-            a_sq = add(
-                f"cast(sum(try_cast({q} AS {SQ_DECIMAL}) * "
-                f"try_cast({q} AS {SQ_DECIMAL})) AS double)"
+            moments = Moments(
+                rows=a_size,
+                nonnull=a_cnt,
+                max=add(agg.max),
+                min=add(agg.min),
+                max_abs=add(agg.max_abs),
+                sum_dec=add(f"cast({agg.sum_dec} AS double)"),
+                sumsq_dec=add(f"cast({agg.sumsq_dec} AS double)"),
+                sum_dbl=(a_ieee := add(agg.sum_dbl)),
+                mean_dbl=f"try_divide({a_ieee}, {a_cnt})",
+                sd_dbl=add(agg.sd_dbl),
             )
-            a_ieee = add(f"sum(cast({q} AS double))")
-            a_sdfb = add(f"stddev_pop(cast({q} AS double))")
-
-            def fin_numeric(
-                got,
-                c=c,
-                typ=typ,
-                a_cnt=a_cnt,
-                a_max=a_max,
-                a_min=a_min,
-                a_guard=a_guard,
-                a_dec=a_dec,
-                a_sq=a_sq,
-                a_ieee=a_ieee,
-                a_sdfb=a_sdfb,
-            ):
-                cnt = got[a_cnt]
-                guard = _f(got[a_guard])
-                in_sum = guard is not None and guard < SUM_GUARD
-                in_sq = guard is not None and guard < SQ_GUARD
-                sx, ieee = _f(got[a_dec]), _f(got[a_ieee])
-                total = sx if in_sum else ieee
-                mean = _div(sx, cnt) if in_sum else _div(ieee, cnt)
-                if in_sq:
-                    sx2, nn = _f(got[a_sq]), float(cnt)
-                    if cnt and sx2 is not None:
-                        var = (sx2 - (sx * sx) / nn) / nn
-                        sd = math.sqrt(max(var, 0.0))
-                    else:
-                        sd = None
-                else:
-                    sd = _f(got[a_sdfb])
-                return [
-                    ("Column", c, "Maximum", _f(got[a_max]), typ),
-                    ("Column", c, "Minimum", _f(got[a_min]), typ),
-                    ("Column", c, "Sum", total, typ),
-                    ("Column", c, "Mean", mean, typ),
-                    ("Column", c, "StandardDeviation", sd, typ),
-                ]
-
-            finishers.append(fin_numeric)
             if include_approx:
                 pts = quantile_points(config.n_quantiles)
                 pts_sql = ", ".join(repr(p) for p in pts)
@@ -211,31 +149,24 @@ def attach_scan_observation(
                     f"percentile_approx({q}, array({pts_sql}), "
                     f"{config.quantile_accuracy})"
                 )
-
-                def fin_quantiles(got, a=a_qs, c=c, typ=typ, pts=pts):
-                    arr = got[a]
-                    return [
-                        (
-                            "Column",
-                            c,
-                            quantile_name(p),
-                            _f(None if arr is None else arr[i]),
-                            typ,
-                        )
-                        for i, p in enumerate(pts)
-                    ]
-
-                finishers.append(fin_quantiles)
-        else:
-            a_maxl = add(f"max(length({q}))")
-            a_minl = add(f"min(length({q}))")
-            finishers.append(
-                lambda got, a1=a_maxl, a2=a_minl, c=c, typ=typ: [
-                    ("Column", c, "MaxLength", _f(got[a1]), typ),
-                    ("Column", c, "MinLength", _f(got[a2]), typ),
+                extra += [
+                    (quantile_name(p), f"element_at({a_qs}, {i + 1})")
+                    for i, p in enumerate(pts)
                 ]
+        else:
+            moments = Moments(
+                rows=a_size,
+                nonnull=a_cnt,
+                max_len=add(agg.max_len),
+                min_len=add(agg.min_len),
             )
+        structs += [
+            metric_struct_sql("Column", c, name, expr, typ)
+            for name, expr in finish(kind, moments) + extra
+        ]
 
+    # the observed row's types: analysis only, no job
+    schema = df.selectExpr(*exprs).schema
     obs = Observation()
     observed = df.observe(obs, *[F.expr(e) for e in exprs])
-    return observed, ScanObservation(obs, finishers)
+    return observed, ScanObservation(obs, schema, structs)

@@ -30,6 +30,15 @@ count — and matches an ANSI-SQL oracle computing the same expressions.
 Cost: decimal aggregation is ~1.5-2x a double sum on the agg side; the scan
 still dominates wall-clock for wide tables.
 
+One finisher
+------------
+How a column's metrics are finished from its raw aggregates — which
+metrics each column kind gets, the decimal-domain guard, the Sum/Mean/
+StandardDeviation arithmetic on each branch — lives here only
+(``finish`` over a ``Moments`` record). Other producers only say where
+the moments live: grouped aggregates (windowed/grouped profiles), merged
+state columns (incremental), an observed row (observe).
+
 Scale notes (100 TB)
 --------------------
 - One job per ~64 columns (``max_fused_columns_per_pass``): hundreds of
@@ -76,20 +85,19 @@ from data_profiler_for_aws_glue_data_catalog_spark.plans.partitioning import (
 # Exact accumulation type for squares (sums: rounding.SUM_DECIMAL).
 SQ_DECIMAL = "decimal(18,6)"  # squares -> decimal(37,12), sum decimal(38,12)
 
-# Value-domain guards for the exact-decimal paths. Inputs are try_cast so a
-# value outside the decimal domain yields NULL instead of an ANSI error; the
-# guard predicate (computed from max(abs(c)) IN THE SAME PASS) switches the
-# finished metric to a plain-double fallback whenever any value is out of
-# range. Inside the domain the decimal branch is bit-reproducible at any
-# partitioning; outside it the fallback is standard IEEE aggregation
-# (correct, but last-ulp partition-order dependent) — documented tradeoff.
-SUM_GUARD = 1e21  # decimal(27,6) integral headroom
-SQ_GUARD = 1e12  # decimal(18,6) integral headroom (squares)
-_SUM_GUARD_SQL = "1e21"
-_SQ_GUARD_SQL = "1e12"
+# Value-domain guards for the exact-decimal paths (SURVEY.md §5). Inputs
+# are try_cast so a value outside the decimal domain yields NULL instead of
+# an ANSI error; the guard predicate (over max(abs(x)) of the SAME rows)
+# switches the finished metric to a plain-double fallback whenever any
+# value is out of range. Inside the domain the decimal branch is
+# bit-reproducible at any partitioning; outside it the fallback is
+# standard IEEE aggregation (correct, but last-ulp partition-order
+# dependent) — documented tradeoff.
+SUM_GUARD_SQL = "1e21"  # decimal(27,6) integral headroom
+SQ_GUARD_SQL = "1e12"  # decimal(18,6) integral headroom (squares)
 # Resolution floor: below this magnitude the 6-dp rounding dominates the
-# values themselves, so the decimal branch is disabled (see _in_domain_sql).
-_SUM_FLOOR_SQL = "1e-3"
+# values themselves, so the decimal branch is disabled (see in_domain_sql).
+_FLOOR_SQL = "1e-3"
 
 
 @dataclass
@@ -119,51 +127,95 @@ class _Batch:
         self.builders.append(lambda a=a: make_structs(a))
 
 
-def _in_domain_sql(c: str, limit: str) -> str:
-    # NULL max (all-null column) -> NULL predicate -> fallback branch,
-    # which also returns NULL there. Coalesce keeps intent explicit.
-    # Two-sided domain: the decimal path rounds inputs to 6 dp, so a
-    # column whose largest magnitude sits below the resolution floor
-    # (0 < max|x| < 1e-3) would quantize to garbage — an all-tiny column
-    # collapses to Sum/Mean 0.0, outside [Minimum, Maximum]. Such columns
-    # take the IEEE branch. All-zero columns stay decimal (exact either
-    # way); integer columns are never in (0, 1e-3) so only fractional
-    # doubles can switch.
-    m = f"max(abs({c}))"
+def in_domain_sql(max_abs: str, limit: str) -> str:
+    """The decimal-domain guard over a max(|x|) expression: true when the
+    decimal branch applies.
+
+    NULL max (all-null column) -> false -> fallback branch, which also
+    returns NULL there. Two-sided domain: the decimal path rounds inputs
+    to 6 dp, so a column whose largest magnitude sits below the
+    resolution floor (0 < max|x| < 1e-3) would quantize to garbage — an
+    all-tiny column collapses to Sum/Mean 0.0, outside [Minimum,
+    Maximum]. Such columns take the IEEE branch. All-zero columns stay
+    decimal (exact either way); integer columns are never in (0, 1e-3) so
+    only fractional doubles can switch.
+    """
+    m = max_abs
     return (
-        f"coalesce({m} < {limit} AND ({m} >= {_SUM_FLOOR_SQL} OR {m} = 0), "
+        f"coalesce({m} < {limit} AND ({m} >= {_FLOOR_SQL} OR {m} = 0), "
         f"false)"
     )
 
 
-def _det_sum_sql(c: str) -> str:
-    dec = f"cast(sum(try_cast({c} AS {SUM_DECIMAL})) AS double)"
-    return (
-        f"CASE WHEN {_in_domain_sql(c, _SUM_GUARD_SQL)} THEN {dec} "
-        f"ELSE sum(cast({c} AS double)) END"
+@dataclass(frozen=True)
+class Moments:
+    """Where one column's raw moments live, as SQL expressions.
+
+    Every producer of scan metrics — the fused pass, the windowed and
+    grouped profiles, merged incremental states, an observed scan —
+    differs only in this: aggregates over the column, or columns of a
+    state / observation row. :func:`finish` turns any of them into the
+    same metric expressions. Text columns leave the numeric fields unset.
+    """
+
+    rows: str  # rows in scope
+    nonnull: str  # non-null values
+    min: str = "NULL"
+    max: str = "NULL"
+    min_len: str = "NULL"
+    max_len: str = "NULL"
+    max_abs: str = "NULL"  # the decimal-domain guard's input
+    sum_dec: str = "NULL"  # exact Σx over 6-dp-rounded values (SUM_DECIMAL)
+    sumsq_dec: str = "NULL"  # exact Σx² over the same values (SQ_DECIMAL)
+    sum_dbl: str = "NULL"  # IEEE fallbacks
+    mean_dbl: str = "NULL"
+    sd_dbl: str = "NULL"
+
+
+def aggregate_moments(q: str) -> Moments:
+    """Moments as aggregate expressions over column reference ``q``."""
+    xd = f"try_cast({q} AS {SQ_DECIMAL})"
+    return Moments(
+        rows="count(1)",
+        nonnull=f"count({q})",
+        min=f"min({q})",
+        max=f"max({q})",
+        min_len=f"min(length({q}))",
+        max_len=f"max(length({q}))",
+        max_abs=f"max(abs({q}))",
+        sum_dec=f"sum(try_cast({q} AS {SUM_DECIMAL}))",
+        sumsq_dec=f"sum({xd} * {xd})",
+        sum_dbl=f"sum(cast({q} AS double))",
+        mean_dbl=f"avg(cast({q} AS double))",
+        sd_dbl=f"stddev_pop(cast({q} AS double))",
     )
 
 
-def _mean_sql(c: str) -> str:
+def sum_sql(m: Moments) -> str:
+    dec = f"cast({m.sum_dec} AS double)"
+    return (
+        f"CASE WHEN {in_domain_sql(m.max_abs, SUM_GUARD_SQL)} THEN {dec} "
+        f"ELSE {m.sum_dbl} END"
+    )
+
+
+def mean_sql(m: Moments) -> str:
     # try_divide: NULL (not an ANSI error) when the column is all-null/empty
-    dec = (
-        f"try_divide(cast(sum(try_cast({c} AS {SUM_DECIMAL})) AS double), "
-        f"count({c}))"
-    )
+    dec = f"try_divide(cast({m.sum_dec} AS double), {m.nonnull})"
     return (
-        f"CASE WHEN {_in_domain_sql(c, _SUM_GUARD_SQL)} THEN {dec} "
-        f"ELSE avg(cast({c} AS double)) END"
+        f"CASE WHEN {in_domain_sql(m.max_abs, SUM_GUARD_SQL)} THEN {dec} "
+        f"ELSE {m.mean_dbl} END"
     )
 
 
-def _stddev_pop_sql(c: str) -> str:
+def stddev_pop_sql(m: Moments) -> str:
     """Population stddev from exact decimal moments, fixed expression shape.
 
     var = (sum(x^2) - sum(x)^2 / n) / n over the 6-dp-rounded values; both
     moments are exact decimals, the finishing arithmetic is a handful of
     IEEE ops -> deterministic. Deequ parity: POPULATION variance
     (NOT Spark's sample-stddev default). Values beyond the decimal domain
-    (|x| >= 1e12) switch to the IEEE stddev_pop fallback — see SQ_GUARD.
+    (|x| >= 1e12) switch to the IEEE fallback — see SQ_GUARD_SQL.
 
     Precision contract: the single-pass moment formula has the classic
     cancellation floor — when sd << sqrt(eps * m2) (near-constant column
@@ -174,20 +226,38 @@ def _stddev_pop_sql(c: str) -> str:
     scale-12 decimal->double cast is double-rounded; see oracle._stddev_sql
     and tests/test_differential_profile.py).
 
-    sx is the SAME expression as _det_sum_sql's decimal branch, so Catalyst
+    sx is the SAME expression as sum_sql's decimal branch, so Catalyst
     dedups the two into one aggregate buffer (same value: both round the
     input to 6 dp before the exact sum).
     """
-    xd = f"try_cast({c} AS {SQ_DECIMAL})"
-    sx = f"cast(sum(try_cast({c} AS {SUM_DECIMAL})) AS double)"
-    sx2 = f"cast(sum({xd} * {xd}) AS double)"
-    n = f"cast(count({c}) AS double)"
+    sx = f"cast({m.sum_dec} AS double)"
+    sx2 = f"cast({m.sumsq_dec} AS double)"
+    n = f"cast({m.nonnull} AS double)"
     var = f"try_divide({sx2} - try_divide({sx} * {sx}, {n}), {n})"
     dec = f"CASE WHEN {n} > 0 THEN sqrt(greatest({var}, 0.0D)) END"
     return (
-        f"CASE WHEN {_in_domain_sql(c, _SQ_GUARD_SQL)} THEN {dec} "
-        f"ELSE stddev_pop(cast({c} AS double)) END"
+        f"CASE WHEN {in_domain_sql(m.max_abs, SQ_GUARD_SQL)} THEN {dec} "
+        f"ELSE {m.sd_dbl} END"
     )
+
+
+def finish(kind: str, m: Moments) -> list[tuple[str, str]]:
+    """(metric name, SQL) for a column of ``kind`` (SURVEY.md §2.A):
+    Completeness, then Maximum/Minimum/Sum/Mean/StandardDeviation on
+    numerics or MaxLength/MinLength on text. A convertible column that was
+    not cast to string gets Completeness only."""
+    out = [("Completeness", f"try_divide({m.nonnull}, {m.rows})")]
+    if kind == T.NUMERIC:
+        return out + [
+            ("Maximum", m.max),
+            ("Minimum", m.min),
+            ("Sum", sum_sql(m)),
+            ("Mean", mean_sql(m)),
+            ("StandardDeviation", stddev_pop_sql(m)),
+        ]
+    if kind == T.TEXT:
+        return out + [("MaxLength", m.max_len), ("MinLength", m.min_len)]
+    return out
 
 
 def quantile_points(n_quantiles: int) -> list[float]:
@@ -288,7 +358,8 @@ def scan_metrics_long(
 
             return make
 
-        b.add(f"try_divide(count({q}), count(1))", m("Completeness"))
+        for name, expr in finish(kind, aggregate_moments(q)):
+            b.add(expr, m(name))
         # Distinctness = exact distinct non-null / non-null rows (Deequ's
         # frequency-table d/n), emitted for every profiled column in every
         # mode — reference parity (Main.scala:318,342).
@@ -301,32 +372,23 @@ def scan_metrics_long(
                 f"approx_count_distinct({q}, {config.approx_distinct_rsd!r})",
                 m("ApproxCountDistinct"),
             )
-        if kind == T.NUMERIC:
-            b.add(f"max({q})", m("Maximum"))
-            b.add(f"min({q})", m("Minimum"))
-            b.add(_det_sum_sql(q), m("Sum"))
-            b.add(_mean_sql(q), m("Mean"))
-            b.add(_stddev_pop_sql(q), m("StandardDeviation"))
-            if include_approx:
-                pts = quantile_points(config.n_quantiles)
-                pts_sql = ", ".join(repr(p) for p in pts)
-                sb.add(
-                    f"percentile_approx({q}, array({pts_sql}), "
-                    f"{config.quantile_accuracy})",
-                    lambda a, col_name=c, col_type=typ, pts=pts: [
-                        metric_struct_sql(
-                            "Column",
-                            col_name,
-                            quantile_name(p),
-                            f"element_at({a}, {i + 1})",
-                            col_type,
-                        )
-                        for i, p in enumerate(pts)
-                    ],
-                )
-        else:  # text (and convertibles already cast to string)
-            b.add(f"max(length({q}))", m("MaxLength"))
-            b.add(f"min(length({q}))", m("MinLength"))
+        if kind == T.NUMERIC and include_approx:
+            pts = quantile_points(config.n_quantiles)
+            pts_sql = ", ".join(repr(p) for p in pts)
+            sb.add(
+                f"percentile_approx({q}, array({pts_sql}), "
+                f"{config.quantile_accuracy})",
+                lambda a, col_name=c, col_type=typ, pts=pts: [
+                    metric_struct_sql(
+                        "Column",
+                        col_name,
+                        quantile_name(p),
+                        f"element_at({a}, {i + 1})",
+                        col_type,
+                    )
+                    for i, p in enumerate(pts)
+                ],
+            )
     batches += sketch_batches + distinct_batches
 
     parts: list[DataFrame] = []

@@ -38,18 +38,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import (
-    ROUND6,
-    round6,
+from data_profiler_for_aws_glue_data_catalog_spark.functions.rounding import ROUND6
+from data_profiler_for_aws_glue_data_catalog_spark.operators.dedup import (
+    _pair_cosine,
+    dot,
 )
-from data_profiler_for_aws_glue_data_catalog_spark.operators.dedup import dot
 from data_profiler_for_aws_glue_data_catalog_spark.plans.partitioning import (
     materialize_wide,
 )
-
-
-def _cos(va: Column, na: Column, vb: Column, nb: Column) -> Column:
-    return round6(dot(va, vb) / (na * nb))
 
 
 def _normed(embs: DataFrame, vec_col: str, id_col: str) -> DataFrame:
@@ -132,7 +128,7 @@ def assign_cells(
     scored = F.transform(
         carr,
         lambda c: F.struct(
-            _cos(F.col("_v"), F.col("_norm"), c["cv"], c["cn"]).alias("cos"),
+            _pair_cosine(F.col("_v"), F.col("_norm"), c["cv"], c["cn"]).alias("cos"),
             (-c["cell"]).alias("negcell"),
         ),
     )
@@ -152,7 +148,7 @@ def probe_cells(
     scored = F.transform(
         carr,
         lambda c: F.struct(
-            (-_cos(F.col("_qv"), F.col("_qn"), c["cv"], c["cn"])).alias("negcos"),
+            (-_pair_cosine(F.col("_qv"), F.col("_qn"), c["cv"], c["cn"])).alias("negcos"),
             c["cell"].alias("cell"),
         ),
     )
@@ -205,7 +201,7 @@ def cosine_topk(
         .select(
             "query_id",
             F.col("id").alias("neighbor_id"),
-            _cos(F.col("_qv"), F.col("_qn"), F.col("_v"), F.col("_norm")).alias(
+            _pair_cosine(F.col("_qv"), F.col("_qn"), F.col("_v"), F.col("_norm")).alias(
                 "cosine"
             ),
         )
@@ -277,7 +273,7 @@ def lsh_topk(
         .select(
             "query_id",
             F.col("id").alias("neighbor_id"),
-            _cos(F.col("_qv"), F.col("_qn"), F.col("_v"), F.col("_norm")).alias(
+            _pair_cosine(F.col("_qv"), F.col("_qn"), F.col("_v"), F.col("_norm")).alias(
                 "cosine"
             ),
         )
@@ -318,7 +314,7 @@ def ivf_topk(
         .select(
             "query_id",
             F.col("id").alias("neighbor_id"),
-            _cos(F.col("_qv"), F.col("_qn"), F.col("_v"), F.col("_norm")).alias(
+            _pair_cosine(F.col("_qv"), F.col("_qn"), F.col("_v"), F.col("_norm")).alias(
                 "cosine"
             ),
         )
@@ -366,7 +362,7 @@ def knn_join(
         .select(
             "query_id",
             F.col("id").alias("neighbor_id"),
-            _cos(F.col("_qv"), F.col("_qn"), F.col("_v"), F.col("_norm")).alias(
+            _pair_cosine(F.col("_qv"), F.col("_qn"), F.col("_v"), F.col("_norm")).alias(
                 "cosine"
             ),
         )
@@ -443,7 +439,7 @@ def ivf_inertia(
     pick = F.filter(carr, lambda c: c["cell"] == F.col("cell"))[0]
     scored = assigned.select(
         "cell",
-        _cos(F.col("_v"), F.col("_norm"), pick["cv"], pick["cn"]).alias("cos"),
+        _pair_cosine(F.col("_v"), F.col("_norm"), pick["cv"], pick["cn"]).alias("cos"),
     )
     return (
         scored.groupBy("cell")

@@ -172,13 +172,13 @@ def size_sql(table: str) -> str:
     return _row("Dataset", "*", "Size", "CAST(COUNT(*) AS DOUBLE)", None) + f" FROM {table}"
 
 
-# Value-domain guards — keep in sync with scan_metrics.SUM_GUARD/SQ_GUARD.
+# Value-domain guards — keep in sync with scan_metrics.SUM_GUARD_SQL/SQ_GUARD_SQL.
 # Inside the domain both engines take the bit-identical decimal branch; the
 # fallback branch (plain IEEE aggregation) only exists for out-of-range data
 # that the fixed testdata never contains.
 _SUM_GUARD = "1e21"
 _SQ_GUARD = "1e12"
-# keep in sync with scan_metrics._SUM_FLOOR_SQL: columns entirely below the
+# keep in sync with scan_metrics._FLOOR_SQL: columns entirely below the
 # 6-dp resolution floor (0 < max|x| < 1e-3) take the IEEE branch instead of
 # quantizing to zero.
 _DEC_FLOOR = "1e-3"

@@ -39,9 +39,8 @@ from pyspark.sql import functions as F
 from data_profiler_for_aws_glue_data_catalog_spark.config import ProfilerConfig
 from data_profiler_for_aws_glue_data_catalog_spark.operators import types as T
 from data_profiler_for_aws_glue_data_catalog_spark.operators.scan_metrics import (
-    _det_sum_sql,
-    _mean_sql,
-    _stddev_pop_sql,
+    aggregate_moments,
+    finish,
 )
 from data_profiler_for_aws_glue_data_catalog_spark.plans.metrics_frame import (
     metric_struct,
@@ -77,26 +76,14 @@ def _windowed_aggs(
         if kind is None:
             continue
         c, typ = f.name, f.dataType.simpleString()
-        col = F.col(sql_ident(c))  # backtick/dot-safe reference
-        add(
-            F.try_divide(F.count(col), F.count(F.lit(1))),
-            "Column", c, "Completeness", typ,
-        )
+        q = sql_ident(c)  # backtick/dot-safe reference
+        for name, expr in finish(kind, aggregate_moments(q)):
+            add(F.expr(expr), "Column", c, name, typ)
         if approx_distinct:
             add(
-                F.approx_count_distinct(col, rsd=config.approx_distinct_rsd),
+                F.approx_count_distinct(F.col(q), rsd=config.approx_distinct_rsd),
                 "Column", c, "ApproxCountDistinct", typ,
             )
-        if kind == T.NUMERIC:
-            q = sql_ident(c)
-            add(F.max(col).cast("double"), "Column", c, "Maximum", typ)
-            add(F.min(col).cast("double"), "Column", c, "Minimum", typ)
-            add(F.expr(_det_sum_sql(q)), "Column", c, "Sum", typ)
-            add(F.expr(_mean_sql(q)), "Column", c, "Mean", typ)
-            add(F.expr(_stddev_pop_sql(q)), "Column", c, "StandardDeviation", typ)
-        elif kind == T.TEXT:
-            add(F.max(F.length(col)), "Column", c, "MaxLength", typ)
-            add(F.min(F.length(col)), "Column", c, "MinLength", typ)
     return exprs, structs
 
 

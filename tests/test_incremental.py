@@ -82,13 +82,14 @@ def test_merge_is_associative(spark, li):
             IC.merge_scan_states(states[1].unionByName(states[2]))
         )
     )
-    # hll bytes may differ in internal sketch mode; IEEE fallback sums are
-    # order-dependent in the last ulp by definition. The exact fields —
+    # hll bytes may differ in internal sketch mode; IEEE fallback moments
+    # are order-dependent in the last ulp by definition. The exact fields —
     # counts, decimal sums, min/max — must be bit-identical.
-    drop = ["hll", "sum_dbl", "sumsq_dbl"]
+    ieee = ["sum_dbl", "mean_dbl", "m2_dbl"]
+    drop = ["hll", *ieee]
     assert _rows(left.drop(*drop)) == _rows(right.drop(*drop))
-    dbl_l = {r.instance: (r.sum_dbl, r.sumsq_dbl) for r in left.collect()}
-    dbl_r = {r.instance: (r.sum_dbl, r.sumsq_dbl) for r in right.collect()}
+    dbl_l = {r.instance: tuple(r[c] for c in ieee) for r in left.collect()}
+    dbl_r = {r.instance: tuple(r[c] for c in ieee) for r in right.collect()}
     for k in dbl_l:
         for a, b in zip(dbl_l[k], dbl_r[k]):
             if a is None or b is None:

@@ -7,6 +7,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from data_profiler_for_aws_glue_data_catalog_spark.operators import similarity as S
+from data_profiler_for_aws_glue_data_catalog_spark.operators.dedup import _pair_cosine
 
 
 def _vecs(spark, vectors):
@@ -49,7 +50,9 @@ def test_topk_two_stage_equals_global_window(spark, embeddings):
         .select(
             "query_id",
             F.col("id").alias("neighbor_id"),
-            S._cos(F.col("_qv"), F.col("_qn"), F.col("_v"), F.col("_norm")).alias("cosine"),
+            _pair_cosine(F.col("_qv"), F.col("_qn"), F.col("_v"), F.col("_norm")).alias(
+                "cosine"
+            ),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))

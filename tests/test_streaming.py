@@ -1,7 +1,10 @@
 from __future__ import annotations
 
 import math
+import os
 from datetime import datetime
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -398,3 +401,41 @@ def test_stream_dedup_state_survives_restart(spark, tmp_path):
     # run 2 resumes from the checkpoint: only the new file is read, the
     # restored state suppresses id 4, and id 5 is the sole new emission
     assert run() == {1, 2, 5}
+
+
+class _FakeQuery:
+    """A streaming query whose availableNow run finishes (or not) in time."""
+
+    name = "sq_fake"
+
+    def __init__(self, finishes: bool):
+        self.finishes = finishes
+        self.stopped = False
+
+    def awaitTermination(self, timeout=None):
+        return self.finishes
+
+    def stop(self):
+        self.stopped = True
+
+
+def test_stream_outliving_its_wait_is_stopped_and_raises():
+    """No silent partial result: a memory-sink run that outlives its wait
+    is stopped and fails, naming the query; one that finishes is left be."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "entry_mod",
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "__spark_entry__.py"),
+    )
+    e = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(e)
+
+    late = _FakeQuery(finishes=False)
+    with pytest.raises(TimeoutError, match="sq_fake"):
+        e._await_stream(late, timeout_s=0.01)
+    assert late.stopped
+
+    done = _FakeQuery(finishes=True)
+    e._await_stream(done, timeout_s=0.01)
+    assert not done.stopped
